@@ -104,10 +104,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // local[32] is the contract (BASELINE.md measures and the spec both say
-    // so); the old default of 4 made unset-env driver runs measure the heavy
-    // shuffle queries at 1/8 parallelism — one of the r10 inflation causes.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // unset ⇒ one task slot per available core: a fixed local[32] on a
+    // smaller host oversubscribes it, and a fixed 4 underuses a larger one.
+    // Set SPARK_GRAFT_CPUS to reproduce an earlier run's local[N].
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

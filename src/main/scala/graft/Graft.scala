@@ -365,40 +365,15 @@ object Graft {
     * persisted r6-era fold columns should re-materialize rather than mix
     * the two assignments. */
   def stratifiedKFold(df: DataFrame, stratum: String, id: Column, k: Int,
-      salt: String = "fold"): DataFrame = {
-    // NB: not graft_-prefixed — denseTokens reserves that prefix for its
-    // own working columns and rejects such key names.
-    // The stratum is hashed to a FIXED-WIDTH prefix: raw values containing
-    // the '|' separator (e.g. strata "a" and "a|b") would interleave in the
-    // global rank and silently unbalance folds. md5 keeps per-stratum
-    // contiguity for any value while preserving within-stratum order (and
-    // hence fold assignments) for separator-free strata.
-    val keyed = df.withColumn("kfold_rk",
-      concat(md5(concat(lit("stratum:"), col(stratum).cast("string"))), lit("|"),
-        md5(concat(lit(s"$salt:"), id.cast("string"))), lit("|"),
-        lpad(id.cast("string"), 20, "0")))
-    val ranked = keyed.join(plans.DistributedRank.denseTokens(keyed, "kfold_rk"), "kfold_rk")
-    val offsets = ranked.groupBy(col(stratum).as("kfold_sg"))
-      .agg(min("token").as("kfold_off"))
-    ranked.join(broadcast(offsets), col(stratum) === col("kfold_sg"))
-      .withColumn("fold", (col("token") - col("kfold_off")) % k)
-      .drop("kfold_rk", "token", "kfold_sg", "kfold_off")
-  }
+      salt: String = "fold"): DataFrame =
+    operators.TrainingOps.stratifiedKFoldOf(df, stratum, id, k, salt)
 
   /** Support mining of consecutive step transitions per key (q171):
     * one LEAD window over (`time`, `tiebreak`), then the
     * (step_a, step_b)-bounded support/occurrence aggregation. */
   def transitionSupport(df: DataFrame, key: Column, time: Column,
-      tiebreak: Column, step: Column, minSupport: Long = 1L): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(key).orderBy(time, tiebreak)
-    df.select(key.as("graft_k"), step.as("step_a"),
-        lead(step, 1).over(w).as("step_b"))
-      .filter(col("step_b").isNotNull)
-      .groupBy("step_a", "step_b")
-      .agg(countDistinct("graft_k").as("n_keys"), count(lit(1)).as("n_occ"))
-      .filter(col("n_keys") >= minSupport)
-  }
+      tiebreak: Column, step: Column, minSupport: Long = 1L): DataFrame =
+    operators.TimeSeries.transitionSupportOf(df, key, time, tiebreak, step, minSupport)
 
   /** CUSUM changepoint per key (q172): the `time` bucket where the
     * cumulative deviation from the key's mean peaks. Order-independent:
@@ -406,98 +381,32 @@ object Graft {
     * cusum = S_d − d·μ. Returns (key, change_point, n_points, cusum,
     * direction). */
   def cusumChangepoint(df: DataFrame, key: Column, time: Column,
-      value: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val per = df.groupBy(key.as("graft_k"), time.as("graft_t"))
-      .agg(Tables.dec(sum(Tables.dec(value))).as("graft_v"))
-    val tot = per.groupBy(col("graft_k").as("graft_k2"))
-      .agg(Tables.dec(sum("graft_v")).as("graft_sv"), count(lit(1)).as("graft_n"))
-    val w = Window.partitionBy("graft_k").orderBy("graft_t")
-    val cusum = sum("graft_v").over(w.rowsBetween(Window.unboundedPreceding,
-        Window.currentRow)).cast("double") -
-      row_number().over(w).cast("bigint") *
-        (col("graft_sv").cast("double") / col("graft_n"))
-    val scored = per.join(broadcast(tot), col("graft_k") === col("graft_k2"))
-      .select(col("graft_k"), col("graft_t"), col("graft_n"), cusum.as("graft_cu"))
-    val wTop = Window.partitionBy("graft_k")
-      .orderBy(abs(col("graft_cu")).desc, col("graft_t"))
-    scored.withColumn("graft_rn", row_number().over(wTop))
-      .filter(col("graft_rn") === 1)
-      .select(col("graft_k").as("key"), col("graft_t").as("change_point"),
-        col("graft_n").as("n_points"), Tables.r6(col("graft_cu")).as("cusum"),
-        when(col("graft_cu") >= 0, lit("up")).otherwise(lit("down")).as("direction"))
-  }
+      value: Column): DataFrame =
+    operators.StatsOps.cusumChangepointOf(df, key, time, value)
 
   /** Cohen's kappa between two label columns (q165): chance-corrected
     * agreement from ONE confusion-matrix aggregation; marginal products
     * go double before multiplying. Returns one row (n, po, pe, kappa). */
-  def cohensKappa(df: DataFrame, truth: Column, pred: Column): DataFrame = {
-    val cm = df.groupBy(truth.as("graft_a"), pred.as("graft_b"))
-      .agg(count(lit(1)).as("graft_c"))
-    val n = cm.agg(sum("graft_c").as("n"))
-    val diag = cm.filter(col("graft_a") === col("graft_b"))
-      .agg(coalesce(sum("graft_c"), lit(0L)).as("graft_nd"))
-    val pe = cm.groupBy("graft_a").agg(sum("graft_c").as("graft_nt"))
-      .join(cm.groupBy("graft_b").agg(sum("graft_c").as("graft_np")),
-        col("graft_a") === col("graft_b"))
-      .agg(coalesce(sum(col("graft_nt").cast("double") * col("graft_np")),
-        lit(0.0)).as("graft_s"))
-    val po = col("graft_nd").cast("double") / col("n")
-    // n goes double BEFORE squaring: an int64 n*n overflows past ~3.04e9
-    // rows (same care the marginal products above already take)
-    val peF = col("graft_s") / (col("n").cast("double") * col("n").cast("double"))
-    n.crossJoin(broadcast(diag)).crossJoin(broadcast(pe))
-      .select(col("n"), Tables.r6(po).as("po"), Tables.r6(peF).as("pe"),
-        Tables.r6((po - peF) / (lit(1.0) - peF)).as("kappa"))
-  }
+  def cohensKappa(df: DataFrame, truth: Column, pred: Column): DataFrame =
+    operators.TextAnalysis.cohensKappaOf(df, truth, pred)
 
   /** Per-group IQR (Tukey-fence) outlier report (q174) on the bounded
     * two-pass quantile fold — never the builtin unbounded `percentile`
     * buffer. Quartiles are r6-rounded before fence arithmetic. */
-  def iqrOutliers(df: DataFrame, group: String, value: Column): DataFrame = {
-    val fences = plans.BoundedQuantiles.groupQuantiles(df, Seq(group),
-        value, Seq(0.25, 0.75), Seq("graft_q1", "graft_q3"))
-      .select(col(group).as("graft_g"),
-        Tables.r6(col("graft_q1")).as("q1"), Tables.r6(col("graft_q3")).as("q3"))
-      .select(col("graft_g"), col("q1"), col("q3"),
-        (col("q1") - lit(1.5) * (col("q3") - col("q1"))).as("graft_lo"),
-        (col("q3") + lit(1.5) * (col("q3") - col("q1"))).as("graft_hi"))
-    df.join(broadcast(fences), col(group) === col("graft_g"))
-      .groupBy(col(group))
-      .agg(count(lit(1)).as("n"), max(col("q1")).as("q1"), max(col("q3")).as("q3"),
-        sum(when(value < col("graft_lo") || value > col("graft_hi"), 1L)
-          .otherwise(0L)).as("n_outliers"))
-      .select(col(group), col("n"), col("q1"), col("q3"),
-        Tables.r6(col("q3") - col("q1")).as("iqr"), col("n_outliers"),
-        Tables.r6(col("n_outliers").cast("double") / col("n")).as("outlier_rate"))
-  }
+  def iqrOutliers(df: DataFrame, group: String, value: Column): DataFrame =
+    operators.StatsOps.iqrOutliersOf(df, group, value,
+      plans.BoundedQuantiles.groupQuantiles(df, Seq(group), value, Seq(0.25, 0.75),
+        Seq("graft_q1", "graft_q3")))
 
   /** Top-k Jaccard similarity between left-side nodes of a bipartite
-    * edge list (q170): wedge join on the right key with pair GENERATION
-    * capped at right-degree ≤ `maxDegree` (GraphCapSuite proves the
-    * bound) while degrees count all edges. `edges` needs (`a`, `b`)
-    * columns; duplicates ignored. */
+    * edge list (q170): each right key's distinct left members as one
+    * sorted set, pairs expanded in-row with pair GENERATION capped at
+    * right-degree ≤ `maxDegree` (GraphCapSuite proves the bound) while
+    * degrees count all edges. `edges` needs (`a`, `b`) columns;
+    * duplicates ignored, null keys never pair. */
   def bipartiteJaccard(edges: DataFrame, a: String, b: String,
-      maxDegree: Int = 50, topK: Int = 20): DataFrame = {
-    val e = edges.select(col(a).as("graft_s"), col(b).as("graft_p")).distinct()
-      .transform(graft.plans.CorpusPin.pin)
-    val deg = e.groupBy("graft_s").agg(count(lit(1)).as("graft_d"))
-    val cold = e.groupBy("graft_p").agg(count(lit(1)).as("graft_pd"))
-      .filter(col("graft_pd") <= maxDegree).select("graft_p")
-    val capped = e.join(cold, "graft_p")
-    val pairs = capped.select(col("graft_p"), col("graft_s").as("sa"))
-      .join(capped.select(col("graft_p"), col("graft_s").as("sb")), "graft_p")
-      .filter(col("sa") < col("sb"))
-      .groupBy("sa", "sb").agg(count(lit(1)).as("shared"))
-    pairs
-      .join(deg.select(col("graft_s").as("sa"), col("graft_d").as("da")), "sa")
-      .join(deg.select(col("graft_s").as("sb"), col("graft_d").as("db")), "sb")
-      .select(col("sa"), col("sb"), col("shared"), col("da"), col("db"),
-        Tables.r6(col("shared").cast("double") /
-          (col("da") + col("db") - col("shared"))).as("jaccard"))
-      .orderBy(col("jaccard").desc, col("sa"), col("sb"))
-      .limit(topK)
-  }
+      maxDegree: Int = 50, topK: Int = 20): DataFrame =
+    operators.GraphOps.bipartiteJaccardOf(edges, a, b, maxDegree, topK)
 
   /** Temperature-scaled (α = 0.5) mixture sampling weights per value of
     * `srcCol`: w = √n/Σ√n plus raw share, up/down-sampling rate, and
@@ -592,38 +501,8 @@ object Graft {
     * `time` must be a BOUNDED bucket (day index, hour index), not a raw
     * timestamp: the post-aggregation frame is key×buckets-sized. */
   def autocorrelation(df: DataFrame, key: Column, time: Column, value: Column,
-      maxLag: Int = 3): DataFrame = {
-    require(maxLag >= 1 && maxLag <= 12, s"autocorrelation: maxLag $maxLag outside [1, 12]")
-    import org.apache.spark.sql.types.DecimalType
-    val per = df.groupBy(key.as("graft_k"), time.as("graft_t"))
-      .agg(Tables.dec(sum(Tables.dec(value))).as("graft_v"))
-      .transform(graft.plans.CorpusPin.pin)
-    val tot = per.groupBy(col("graft_k").as("graft_k2"))
-      .agg(Tables.dec(sum("graft_v")).as("graft_sv"), count(lit(1)).as("graft_n"))
-    val wOrd = Window.partitionBy("graft_k").orderBy("graft_t")
-    val dev = per.join(broadcast(tot), col("graft_k") === col("graft_k2"))
-      .select(col("graft_k"), col("graft_t"), col("graft_n"),
-        (col("graft_v").cast("double") -
-          col("graft_sv").cast("double") / col("graft_n")).as("graft_dev"))
-    def term(c: Column): Column =
-      Tables.r6(col("graft_dev") * c).cast(DecimalType(18, 6))
-    val led = (1 to maxLag).foldLeft(dev) { (d, k) =>
-      d.withColumn(s"graft_dev$k", lead(col("graft_dev"), k).over(wOrd))
-    }
-    // one r6→DECIMAL sum per lag + the variance term, built as a list so
-    // maxLag stays a parameter
-    val aggExprs =
-      max("graft_n").as("n_buckets") +:
-      sum(term(col("graft_dev"))).as("graft_sxx") +:
-      (1 to maxLag).map(k => sum(term(col(s"graft_dev$k"))).as(s"graft_s$k"))
-    val folded = led.groupBy("graft_k").agg(aggExprs.head, aggExprs.tail: _*)
-    val stackExpr = (1 to maxLag)
-      .map(k => s"${k}L, graft_s$k").mkString(s"stack($maxLag, ", ", ", ") AS (lag, graft_sxy)")
-    folded.select(col("graft_k").as("key"), col("n_buckets"), col("graft_sxx"),
-        expr(stackExpr))
-      .select(col("key"), col("lag"), col("n_buckets"),
-        Tables.r6(col("graft_sxy").cast("double") / col("graft_sxx").cast("double")).as("acf"))
-  }
+      maxLag: Int = 3): DataFrame =
+    operators.StatsOps.autocorrelationOf(df, key, time, value, maxLag)
 
   /** Bounded 3-hop reach / multi-source BFS (q187) over a bipartite
     * edge frame: per seed (an `s`-side key), distinct `c`-side
@@ -637,20 +516,8 @@ object Graft {
     * every size-1/size-2 itemset over per-`user` distinct `item`s with
     * its supporting-user count, flagged where support < `k`. */
   def kmAnonymityAudit(df: DataFrame, user: Column, item: Column,
-      k: Int = 5): DataFrame = {
-    val ut = df.select(user.as("graft_u"), item.as("graft_i")).distinct()
-      .transform(graft.plans.CorpusPin.pin)
-    val singles = ut.groupBy(col("graft_i").cast("string").as("itemset"))
-      .agg(count(lit(1)).as("support")).withColumn("m", lit(1L))
-    val pairs = ut.toDF("graft_u", "graft_a")
-      .join(ut.toDF("graft_u", "graft_b"), "graft_u")
-      .filter(col("graft_a") < col("graft_b"))
-      .select(concat_ws("|", col("graft_a"), col("graft_b")).as("itemset"))
-      .groupBy("itemset").agg(count(lit(1)).as("support")).withColumn("m", lit(2L))
-    singles.unionByName(pairs)
-      .select(col("itemset"), col("m"), col("support"),
-        (col("support") < k).as("risky"))
-  }
+      k: Int = 5): DataFrame =
+    operators.PrivacyOps.kmAnonymityAuditOf(df, user, item, k)
 
   /** Kaplan–Meier risk table + log survival curve (q189): `df` is one
     * row per subject; `event` = 1 observed / 0 right-censored,
@@ -717,19 +584,8 @@ object Graft {
     * (key, s, e, tie) closed intervals; returns (key, n_blocks,
     * covered) where blocks are the maximal disjoint merged intervals
     * and covered = Σ block lengths. `tie` breaks equal starts (R5). */
-  def intervalUnion(iv: DataFrame): DataFrame = {
-    val ord = Window.partitionBy("key").orderBy(col("s"), col("tie"))
-    val prevMaxE = max("e").over(ord.rowsBetween(Window.unboundedPreceding, -1))
-    iv.withColumn("graft_new",
-        when(prevMaxE.isNull || col("s") > prevMaxE, 1L).otherwise(0L))
-      .withColumn("graft_blk", sum("graft_new")
-        .over(ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy("key", "graft_blk")
-      .agg(min("s").as("graft_bs"), max("e").as("graft_be"))
-      .groupBy("key")
-      .agg(count(lit(1)).as("n_blocks"),
-        sum(col("graft_be") - col("graft_bs")).as("covered"))
-  }
+  def intervalUnion(iv: DataFrame): DataFrame =
+    operators.IntervalOps.intervalUnionOf(iv)
 
   /** Nearest-neighbour temporal match (q202's shape as a primitive):
     * for each row of `probes` (key, t, id), the id of the nearest row
@@ -737,47 +593,20 @@ object Graft {
     * (tie → the earlier candidate), else NULL. One keyed window
     * shuffle — no self or range join. */
   def nearestMatch(probes: DataFrame, cands: DataFrame, tolerance: Long): DataFrame = {
-    require(tolerance >= 0, s"nearestMatch: tolerance $tolerance must be non-negative")
+    // a same-time candidate sorts before the probe, so it counts as the
+    // preceding side (gap 0)
     val p = probes.select(col("key"), col("t"), col("id"), lit(1L).as("graft_probe"))
     val c = cands.select(col("key"), col("t"), col("id"), lit(0L).as("graft_probe"))
-    val ord = Window.partitionBy("key").orderBy(col("t"), col("graft_probe"), col("id"))
-    val back = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val fwd = ord.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val isC = col("graft_probe") === 0L
-    val withN = p.unionByName(c)
-      .withColumn("graft_pts", last(when(isC, col("t")), ignoreNulls = true).over(back))
-      .withColumn("graft_pid", last(when(isC, col("id")), ignoreNulls = true).over(back))
-      .withColumn("graft_nts", first(when(isC, col("t")), ignoreNulls = true).over(fwd))
-      .withColumn("graft_nid", first(when(isC, col("id")), ignoreNulls = true).over(fwd))
-      .filter(col("graft_probe") === 1L)
-    val dPrev = when(col("graft_pts").isNotNull, col("t") - col("graft_pts"))
-    val dNext = when(col("graft_nts").isNotNull, col("graft_nts") - col("t"))
-    val inPrev = dPrev.isNotNull && dPrev <= tolerance
-    val inNext = dNext.isNotNull && dNext <= tolerance
-    val takePrev = inPrev && (!inNext || dPrev <= dNext)
-    withN.select(col("key"), col("id"), col("t"),
-      when(takePrev, col("graft_pid")).otherwise(when(inNext, col("graft_nid")))
-        .as("match_id"),
-      when(takePrev, -dPrev).otherwise(when(inNext, dNext)).as("gap"))
+    operators.IntervalOps.nearestMatchOf(p.unionByName(c),
+      Seq(col("graft_probe"), col("id")), tolerance)
   }
 
   /** Weighted Type-1 median per key (q206's shape as a primitive):
     * `df` carries (key, v, w, tie); returns (key, n, w_total,
     * median_v) — the v at which cumulative weight first reaches half,
     * an actual data value. Integer weights keep the sweep exact. */
-  def weightedMedian(df: DataFrame): DataFrame = {
-    val part = Window.partitionBy("key")
-    val ord = part.orderBy(col("v"), col("tie"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("graft_cum", sum("w").over(ord))
-      .withColumn("graft_tot", sum("w").over(part))
-      .withColumn("graft_n", count(lit(1)).over(part))
-      .filter(lit(2L) * col("graft_cum") >= col("graft_tot"))
-      .groupBy("key")
-      .agg(min(struct(col("v"), col("tie"), col("graft_tot"), col("graft_n"))).as("m"))
-      .select(col("key"), col("m.graft_n").as("n"),
-        col("m.graft_tot").as("w_total"), col("m.v").as("median_v"))
-  }
+  def weightedMedian(df: DataFrame): DataFrame =
+    operators.StatsOps.weightedMedianOf(df).drop("cum_at_median")
 
   /** CDC changelog compaction (q201's shape as a primitive): `changelog`
     * carries (key, seq, op, v) with `deleteOp` marking deletes; returns
@@ -785,13 +614,7 @@ object Graft {
     * key, delete-terminated keys dropped. ONE map-side-combinable
     * aggregation (max-struct argmax), never a window. */
   def cdcCompact(changelog: DataFrame, deleteOp: String = "D"): DataFrame =
-    changelog
-      .groupBy("key")
-      .agg(max(struct(col("seq"), col("op"), col("v"))).as("m"),
-        count(lit(1)).as("n_ops"))
-      .filter(col("m.op") =!= deleteOp)
-      .select(col("key"), col("n_ops"), col("m.seq").as("last_seq"),
-        col("m.v").as("v"))
+    operators.PipelineOps.cdcCompactOf(changelog, deleteOp)
 
   /** ROC curve + tie-corrected AUC from a pre-binned scored frame
     * (q196's shape as a primitive): `scored` carries (bin: integer
@@ -799,28 +622,8 @@ object Graft {
     * tpr/fpr in descending-score order and the exact-numerator AUC on
     * every row. Bin the score yourself — integer bins are what keep
     * the curve deterministic and the frame bounded. */
-  def rocCurve(scored: DataFrame): DataFrame = {
-    val b = scored.groupBy("bin")
-      .agg(sum(col("pos")).as("npos"),
-        (count(lit(1)) - sum(col("pos"))).as("nneg"))
-      .localCheckpoint(true)
-    val w = Window.orderBy(col("bin").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wPrev = Window.orderBy(col("bin").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val totals = b.agg(sum("npos").as("graft_p"), sum("nneg").as("graft_n"))
-    val aucNum = b
-      .withColumn("graft_cp", coalesce(sum("npos").over(wPrev), lit(0L)))
-      .agg(sum(col("nneg") * (lit(2L) * col("graft_cp") + col("npos"))).as("graft_a2"))
-    b.withColumn("graft_cum_p", sum("npos").over(w))
-      .withColumn("graft_cum_n", sum("nneg").over(w))
-      .crossJoin(broadcast(totals)).crossJoin(broadcast(aucNum))
-      .select(col("bin"), col("npos"), col("nneg"),
-        Tables.r6(col("graft_cum_p").cast("double") / col("graft_p")).as("tpr"),
-        Tables.r6(col("graft_cum_n").cast("double") / col("graft_n")).as("fpr"),
-        Tables.r6(col("graft_a2").cast("double") /
-          (lit(2.0) * col("graft_p") * col("graft_n"))).as("auc"))
-  }
+  def rocCurve(scored: DataFrame): DataFrame =
+    operators.EvalOps.rocCurveOf(scored)
 
   /** NATIVE backward as-of join — the custom-LogicalPlan tier of the
     * operator ladder (see `graft.plans.AsOfJoinPlan`): for each fact
@@ -887,23 +690,8 @@ object Graft {
     * `versions` needs (key, t, version_id, v). Returns the fact rows
     * plus `v_at_t` (nullable). Times and ttl are plain integers
     * (bucket/epoch units — caller picks the resolution). */
-  def pointInTimeJoin(facts: DataFrame, versions: DataFrame, ttl: Long): DataFrame = {
-    require(ttl >= 0, s"pointInTimeJoin: ttl $ttl must be non-negative")
-    val reg = versions.select(col("key"), col("t"), lit(0L).as("graft_kind"),
-      col("version_id").as("graft_id"), col("v").cast("string").as("graft_v"))
-    val fct = facts.select(col("key"), col("t"), lit(1L).as("graft_kind"),
-      col("fact_id").as("graft_id"), lit(null).cast("string").as("graft_v"))
-    val w = Window.partitionBy("key")
-      .orderBy(col("t"), col("graft_kind"), col("graft_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    reg.unionByName(fct)
-      .withColumn("graft_vc", last(col("graft_v"), ignoreNulls = true).over(w))
-      .withColumn("graft_tc",
-        last(when(col("graft_kind") === 0L, col("t")), ignoreNulls = true).over(w))
-      .filter(col("graft_kind") === 1L)
-      .select(col("key"), col("graft_id").as("fact_id"), col("t"),
-        when(col("t") - col("graft_tc") <= ttl, col("graft_vc")).as("v_at_t"))
-  }
+  def pointInTimeJoin(facts: DataFrame, versions: DataFrame, ttl: Long): DataFrame =
+    operators.Joins.pointInTimeJoinOf(facts, versions, ttl)
 
   /** Per-user (click, purchase) conversion pairs with the click inside
     * `windowUs` strictly before the purchase — the batch face of the

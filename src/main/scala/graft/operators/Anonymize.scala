@@ -91,18 +91,15 @@ object Anonymize {
   }
 
   /** q42: cell suppression to reach k — null out QI cells in groups whose
-    * size < k, via a window count (one shuffle on the QI). */
-  private def q42(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy("c_nationkey", "c_mktsegment", "acct_bin")
-    Tables(spark, sfDir, "customer")
-      .withColumn("acct_bin", acctBin)
-      .withColumn("gs", count(lit(1)).over(w))
-      .select(col("c_custkey"),
-        when(col("gs") >= 5, col("c_nationkey")).as("nationkey_k"),
-        when(col("gs") >= 5, col("c_mktsegment")).as("mktsegment_k"),
-        when(col("gs") >= 5, col("acct_bin")).as("acct_bin_k"))
+    * size < k, via a window count (one shuffle on the QI): the facade's
+    * [[graft.Graft.suppressBelowK]] on the generalized customer frame. */
+  private def q42(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Graft.suppressBelowK(
+      Tables(spark, sfDir, "customer").withColumn("acct_bin", acctBin),
+      Seq("c_nationkey", "c_mktsegment", "acct_bin"), k = 5)
+      .select(col("c_custkey"), col("c_nationkey_k").as("nationkey_k"),
+        col("c_mktsegment_k").as("mktsegment_k"), col("acct_bin_k"))
       .orderBy("c_custkey")
-  }
 
   /** q43: l-diversity audit — distinct sensitive values per QI group,
     * flag l < 2. */

@@ -65,8 +65,13 @@ object EvalOps {
     *
     * Scale: one groupBy(bin) shuffle; windows + the AUC fold run on the
     * ≤1001-row frame; P/N/auc attach as broadcast 1-row aggregates. */
-  private def q196(spark: SparkSession, sfDir: String): DataFrame = {
-    val b = binned(spark, sfDir).localCheckpoint(true) // ≤1001 rows; 3 consumers
+  private def q196(spark: SparkSession, sfDir: String): DataFrame =
+    rocCurveOf(scored(spark, sfDir)).orderBy("bin")
+
+  /** The ROC/AUC computation behind q196 AND [[graft.Graft.rocCurve]];
+    * output is unordered (q196 adds its oracle ORDER BY). */
+  private[graft] def rocCurveOf(scoredDf: DataFrame): DataFrame = {
+    val b = binnedOf(scoredDf).localCheckpoint(true) // ≤1001 rows; 3 consumers
     val w = Window.orderBy(col("bin").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wPrev = Window.orderBy(col("bin").desc)
@@ -83,7 +88,6 @@ object EvalOps {
         Tables.r6(col("cumneg").cast("double") / col("n_tot")).as("fpr"),
         Tables.r6(col("auc_num2").cast("double") /
           (lit(2.0) * col("p_tot") * col("n_tot"))).as("auc"))
-      .orderBy("bin")
   }
 
   /** q255: precision–recall curve + average precision over the same

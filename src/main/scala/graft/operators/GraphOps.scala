@@ -315,26 +315,31 @@ object GraphOps {
     * nothing about similarity anyway) while degrees/union sizes still
     * count ALL parts; pair fan-out is then ≤ cap²/2 per part. Top-20 via
     * sort+limit (TakeOrderedAndProject — no global sort materializes). */
-  private def q170(spark: SparkSession, sfDir: String): DataFrame = {
-    // r17 optimization (guide §2.3 "aggregate before you shuffle", §2.4):
-    // group each part's DISTINCT suppliers into one sorted array — ONE
-    // map-side-combined exchange — instead of pinning the distinct (s, p)
-    // frame and paying an exchange per consumer (degree agg, cap agg, cap
-    // join, both wedge-join sides ≈ 6 corpus-scale exchanges). The df cap
-    // becomes an in-row size() filter, the wedge join an in-row pair
-    // expansion of the sorted set (sa < sb by construction), degrees an
-    // explode + keyed count. Result-identical: same distinct (s, p)
-    // universe, same capped pair multiset. The per-part array is exactly
-    // MaxPartDegree-bounded for pair generation; uncapped parts' arrays
-    // are degree-sized — the same bound the previous distinct frame's
-    // hottest key had.
-    val parts = Tables(spark, sfDir, "lineitem")
-      .select(col("l_suppkey").as("s"), col("l_partkey").as("p"))
+  private def q170(spark: SparkSession, sfDir: String): DataFrame =
+    bipartiteJaccardOf(Tables(spark, sfDir, "lineitem"), "l_suppkey", "l_partkey",
+      MaxPartDegree, 20)
+
+  /** The top-k Jaccard computation behind q170 AND
+    * [[graft.Graft.bipartiteJaccard]] over the (`a`, `b`) edges of
+    * `edges`: (sa, sb, shared, da, db, jaccard), sa < sb, pairs generated
+    * only through `b` keys with ≤ `maxDegree` distinct `a` members, while
+    * degrees count every distinct edge. Null keys never pair.
+    *
+    * Each `b` key's DISTINCT `a` members become one sorted array — ONE
+    * map-side-combined exchange (guide §2.3 "aggregate before you
+    * shuffle") instead of an exchange per consumer of a distinct edge
+    * frame. The cap is an in-row size() filter, the wedge join an in-row
+    * pair expansion of the sorted set (sa < sb by construction), degrees
+    * an explode + keyed count. Arrays are `maxDegree`-bounded for pair
+    * generation; uncapped keys' arrays are degree-sized. */
+  private[graft] def bipartiteJaccardOf(edges: DataFrame, a: String, b: String,
+      maxDegree: Int, topK: Int): DataFrame = {
+    val parts = edges.select(col(a).as("s"), col(b).as("p"))
       .groupBy("p").agg(sort_array(collect_set(col("s"))).as("ss"))
       .transform(graft.plans.CorpusPin.pin) // degrees, cap filter, pair explode
     val deg = parts.select(explode(col("ss")).as("s"))
       .groupBy("s").agg(count(lit(1)).as("d"))
-    val pairs = parts.filter(size(col("ss")) <= MaxPartDegree)
+    val pairs = parts.filter(col("p").isNotNull && size(col("ss")) <= maxDegree)
       .select(explode(expr(
         "flatten(transform(ss, (x, i) -> " +
           "transform(slice(ss, i + 2, size(ss)), " +
@@ -348,7 +353,7 @@ object GraphOps {
         Tables.r6(col("shared").cast("double") /
           (col("da") + col("db") - col("shared"))).as("jaccard"))
       .orderBy(col("jaccard").desc, col("sa"), col("sb"))
-      .limit(20)
+      .limit(topK)
   }
 
   /** q187: bounded k-hop reach (multi-source BFS, k = 3) over the

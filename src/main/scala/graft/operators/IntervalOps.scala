@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -52,22 +52,27 @@ object IntervalOps {
     * Scale: one (user, type) aggregation collapses the corpus to ≤5
     * rows per user; the sweep windows are user-keyed (no global sort);
     * everything downstream is keyed aggregation on that bounded frame. */
-  private def q200(spark: SparkSession, sfDir: String): DataFrame = {
-    val iv = Tables.events(spark, sfDir)
-      .groupBy(col("user_id"), col("event_type"))
-      .agg(min("ts_us").as("s_us"), max("ts_us").as("e_us"))
-    val ord = Window.partitionBy("user_id").orderBy(col("s_us"), col("event_type"))
-    val prevMaxE = max("e_us").over(ord.rowsBetween(Window.unboundedPreceding, -1))
-    val blocks = iv
-      .withColumn("new_blk",
-        when(prevMaxE.isNull || col("s_us") > prevMaxE, 1L).otherwise(0L))
-      .withColumn("blk",
-        sum("new_blk").over(ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy("user_id", "blk")
-      .agg(min("s_us").as("bs"), max("e_us").as("be"))
-    blocks.groupBy("user_id")
-      .agg(count(lit(1)).as("n_blocks"), sum(col("be") - col("bs")).as("covered_us"))
+  private def q200(spark: SparkSession, sfDir: String): DataFrame =
+    intervalUnionOf(Tables.events(spark, sfDir)
+        .groupBy(col("user_id").as("key"), col("event_type").as("tie"))
+        .agg(min("ts_us").as("s"), max("ts_us").as("e")))
+      .select(col("key").as("user_id"), col("n_blocks"), col("covered").as("covered_us"))
       .orderBy("user_id")
+
+  /** The interval-union sweep behind q200 AND
+    * [[graft.Graft.intervalUnion]]. */
+  private[graft] def intervalUnionOf(iv: DataFrame): DataFrame = {
+    val ord = Window.partitionBy("key").orderBy(col("s"), col("tie"))
+    val prevMaxE = max("e").over(ord.rowsBetween(Window.unboundedPreceding, -1))
+    iv.withColumn("graft_new",
+        when(prevMaxE.isNull || col("s") > prevMaxE, 1L).otherwise(0L))
+      .withColumn("graft_blk", sum("graft_new")
+        .over(ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .groupBy("key", "graft_blk")
+      .agg(min("s").as("graft_bs"), max("e").as("graft_be"))
+      .groupBy("key")
+      .agg(count(lit(1)).as("n_blocks"),
+        sum(col("graft_be") - col("graft_bs")).as("covered"))
   }
 
   /** q202: nearest-event temporal match — for every `error` event, the
@@ -82,28 +87,47 @@ object IntervalOps {
     * first_value over the same sort, then a per-row pick of the nearer
     * side. No self-join, no range join. */
   private def q202(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = Tables.events(spark, sfDir)
-      .select(col("user_id"), col("event_id"), col("ts_us"), col("event_type"))
-    val ord = Window.partitionBy("user_id").orderBy(col("ts_us"), col("event_id"))
+    val tagged = Tables.events(spark, sfDir)
+      .select(col("user_id").as("key"), col("ts_us").as("t"), col("event_id").as("id"),
+        when(col("event_type") === "error", 1L)
+          .when(col("event_type") === "purchase", 0L).as("graft_probe"))
+    // same-time rows order by event id, as the oracle's (ts, event_id) sort
+    nearestMatchOf(tagged, Seq(col("id")), UsPerHour)
+      .select(col("key").as("user_id"), col("id").as("event_id"), col("t").as("ts_us"),
+        col("match_id"), col("gap").as("gap_us"))
+      .orderBy("user_id", "ts_us", "event_id")
+  }
+
+  /** The nearest-candidate match behind q202 AND
+    * [[graft.Graft.nearestMatch]]. `tagged` carries (key, t, id,
+    * graft_probe): 1 marks a probe, 0 a candidate, NULL a row that is
+    * neither. Within a key, rows sort by t and then `tieOrder`; the last
+    * preceding and first following candidate (t, id) carry via IGNORE
+    * NULLS last/first over that sort, and each probe takes the nearer
+    * side within ±`tolerance` (equal distance → the preceding one), else
+    * NULL. Returns (key, id, t, match_id, gap) per probe. */
+  private[graft] def nearestMatchOf(tagged: DataFrame, tieOrder: Seq[Column],
+      tolerance: Long): DataFrame = {
+    require(tolerance >= 0, s"nearestMatch: tolerance $tolerance must be non-negative")
+    val ord = Window.partitionBy("key").orderBy(col("t") +: tieOrder: _*)
     val back = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val fwd = ord.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val isP = col("event_type") === "purchase"
-    val withNbrs = ev
-      .withColumn("p_ts", last(when(isP, col("ts_us")), ignoreNulls = true).over(back))
-      .withColumn("p_id", last(when(isP, col("event_id")), ignoreNulls = true).over(back))
-      .withColumn("n_ts", first(when(isP, col("ts_us")), ignoreNulls = true).over(fwd))
-      .withColumn("n_id", first(when(isP, col("event_id")), ignoreNulls = true).over(fwd))
-      .filter(col("event_type") === "error")
-    val dPrev = when(col("p_ts").isNotNull, col("ts_us") - col("p_ts"))
-    val dNext = when(col("n_ts").isNotNull, col("n_ts") - col("ts_us"))
-    val inPrev = dPrev.isNotNull && dPrev <= UsPerHour
-    val inNext = dNext.isNotNull && dNext <= UsPerHour
+    val isC = col("graft_probe") === 0L
+    val withN = tagged
+      .withColumn("graft_pts", last(when(isC, col("t")), ignoreNulls = true).over(back))
+      .withColumn("graft_pid", last(when(isC, col("id")), ignoreNulls = true).over(back))
+      .withColumn("graft_nts", first(when(isC, col("t")), ignoreNulls = true).over(fwd))
+      .withColumn("graft_nid", first(when(isC, col("id")), ignoreNulls = true).over(fwd))
+      .filter(col("graft_probe") === 1L)
+    val dPrev = when(col("graft_pts").isNotNull, col("t") - col("graft_pts"))
+    val dNext = when(col("graft_nts").isNotNull, col("graft_nts") - col("t"))
+    val inPrev = dPrev.isNotNull && dPrev <= tolerance
+    val inNext = dNext.isNotNull && dNext <= tolerance
     val takePrev = inPrev && (!inNext || dPrev <= dNext)
-    withNbrs.select(col("user_id"), col("event_id"), col("ts_us"),
-        when(takePrev, col("p_id")).otherwise(when(inNext, col("n_id")))
-          .as("match_id"),
-        when(takePrev, -dPrev).otherwise(when(inNext, dNext)).as("gap_us"))
-      .orderBy("user_id", "ts_us", "event_id")
+    withN.select(col("key"), col("id"), col("t"),
+      when(takePrev, col("graft_pid")).otherwise(when(inNext, col("graft_nid")))
+        .as("match_id"),
+      when(takePrev, -dPrev).otherwise(when(inNext, dNext)).as("gap"))
   }
 
   /** q207: interval-overlap JOIN — every (user, day) activity interval

@@ -381,30 +381,44 @@ object Joins {
     val epoch = lit("1970-01-01").cast("date")
     val orders = Tables(spark, sfDir, "orders")
     val regimes = orders
-      .select(col("o_custkey").as("cust"),
+      .select(col("o_custkey").as("key"),
         datediff(col("o_orderdate").cast("date"), epoch).cast("bigint").as("t"),
-        lit(0L).as("kind"), col("o_orderkey").as("id"), lit(0).as("line"),
-        col("o_orderpriority").as("prio"))
+        struct(col("o_orderkey").as("id"), lit(0).as("line")).as("version_id"),
+        col("o_orderpriority").as("v"))
     val facts = Tables(spark, sfDir, "lineitem")
       .join(orders.select(col("o_orderkey"), col("o_custkey")),
         col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("cust"),
+      .select(col("o_custkey").as("key"),
         datediff(col("l_shipdate").cast("date"), epoch).cast("bigint").as("t"),
-        lit(1L).as("kind"), col("l_orderkey").as("id"),
-        col("l_linenumber").as("line"), lit(null).cast("string").as("prio"))
-    val w = Window.partitionBy("cust")
-      .orderBy(col("t"), col("kind"), col("id"), col("line"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    regimes.unionByName(facts)
-      .withColumn("p_carr", last(col("prio"), ignoreNulls = true).over(w))
-      .withColumn("t_carr",
-        last(when(col("kind") === 0L, col("t")), ignoreNulls = true).over(w))
-      .filter(col("kind") === 1L)
-      .select(col("cust"), col("id").as("l_orderkey"), col("line").as("l_linenumber"),
-        col("t").as("ship_day"),
-        when(col("t") - col("t_carr") <= 30L, col("p_carr")).as("prio_at_ship"))
+        struct(col("l_orderkey").as("id"), col("l_linenumber").as("line")).as("fact_id"))
+    pointInTimeJoinOf(facts, regimes, ttl = 30L)
+      .select(col("key").as("cust"), col("fact_id.id").as("l_orderkey"),
+        col("fact_id.line").as("l_linenumber"), col("t").as("ship_day"),
+        col("v_at_t").as("prio_at_ship"))
       .withColumn("covered", col("prio_at_ship").isNotNull)
       .orderBy("cust", "ship_day", "l_orderkey", "l_linenumber")
+  }
+
+  /** The validity-window join behind q194 AND
+    * [[graft.Graft.pointInTimeJoin]]. Ids only need an ordering, so a
+    * struct id (q194's orderkey, linenumber) is a multi-column tiebreak. */
+  private[graft] def pointInTimeJoinOf(facts: DataFrame, versions: DataFrame,
+      ttl: Long): DataFrame = {
+    require(ttl >= 0, s"pointInTimeJoin: ttl $ttl must be non-negative")
+    val reg = versions.select(col("key"), col("t"), lit(0L).as("graft_kind"),
+      col("version_id").as("graft_id"), col("v").cast("string").as("graft_v"))
+    val fct = facts.select(col("key"), col("t"), lit(1L).as("graft_kind"),
+      col("fact_id").as("graft_id"), lit(null).cast("string").as("graft_v"))
+    val w = Window.partitionBy("key")
+      .orderBy(col("t"), col("graft_kind"), col("graft_id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    reg.unionByName(fct)
+      .withColumn("graft_vc", last(col("graft_v"), ignoreNulls = true).over(w))
+      .withColumn("graft_tc",
+        last(when(col("graft_kind") === 0L, col("t")), ignoreNulls = true).over(w))
+      .filter(col("graft_kind") === 1L)
+      .select(col("key"), col("graft_id").as("fact_id"), col("t"),
+        when(col("t") - col("graft_tc") <= ttl, col("graft_vc")).as("v_at_t"))
   }
 
   /** q221: the NATIVE as-of join exec (graft.plans.AsOfJoinPlan) under

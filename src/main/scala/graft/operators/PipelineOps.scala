@@ -882,23 +882,29 @@ object PipelineOps {
     * unique per key so later struct fields never tie-break. */
   private def q201(spark: SparkSession, sfDir: String): DataFrame = {
     val o = Tables(spark, sfDir, "orders")
-    val ins = o.select(col("o_orderkey"), lit(1L).as("seq"),
-      lit("I").as("op"), col("o_totalprice").as("price"))
+    val ins = o.select(col("o_orderkey").as("key"), lit(1L).as("seq"),
+      lit("I").as("op"), col("o_totalprice").as("v"))
     val upd = o.filter(col("o_orderstatus") === "F")
-      .select(col("o_orderkey"), lit(2L).as("seq"), lit("U").as("op"),
-        (col("o_totalprice") + 100.0).as("price"))
+      .select(col("o_orderkey").as("key"), lit(2L).as("seq"), lit("U").as("op"),
+        (col("o_totalprice") + 100.0).as("v"))
     val del = o.filter(col("o_orderstatus") === "P")
-      .select(col("o_orderkey"), lit(3L).as("seq"), lit("D").as("op"),
-        lit(null).cast("double").as("price"))
-    ins.unionByName(upd).unionByName(del)
-      .groupBy("o_orderkey")
-      .agg(max(struct(col("seq"), col("op"), col("price"))).as("last"),
-        count(lit(1)).as("n_ops"))
-      .filter(col("last.op") =!= "D")
-      .select(col("o_orderkey"), col("n_ops"), col("last.seq").as("last_seq"),
-        Tables.r6(col("last.price")).as("final_price"))
+      .select(col("o_orderkey").as("key"), lit(3L).as("seq"), lit("D").as("op"),
+        lit(null).cast("double").as("v"))
+    cdcCompactOf(ins.unionByName(upd).unionByName(del), deleteOp = "D")
+      .select(col("key").as("o_orderkey"), col("n_ops"), col("last_seq"),
+        Tables.r6(col("v")).as("final_price"))
       .orderBy("o_orderkey")
   }
+
+  /** The changelog compaction behind q201 AND [[graft.Graft.cdcCompact]]. */
+  private[graft] def cdcCompactOf(changelog: DataFrame, deleteOp: String): DataFrame =
+    changelog
+      .groupBy("key")
+      .agg(max(struct(col("seq"), col("op"), col("v"))).as("m"),
+        count(lit(1)).as("n_ops"))
+      .filter(col("m.op") =!= deleteOp)
+      .select(col("key"), col("n_ops"), col("m.seq").as("last_seq"),
+        col("m.v").as("v"))
 
   /** q211: group-mean imputation — the missing-value repair step of
     * every feature pipeline, the statistical member the fill family

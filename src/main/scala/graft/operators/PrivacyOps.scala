@@ -237,20 +237,26 @@ object PrivacyOps {
     * DOMAIN (5 event types ⇒ ≤ 10 pairs/user), never by event volume.
     * For wide item domains the q61 df-cap recipe applies upstream;
     * here the domain is catalog-bounded. */
-  private def q188(spark: SparkSession, sfDir: String): DataFrame = {
-    val ut = Tables.events(spark, sfDir)
-      .select(col("user_id"), col("event_type")).distinct()
+  private def q188(spark: SparkSession, sfDir: String): DataFrame =
+    kmAnonymityAuditOf(Tables.events(spark, sfDir), col("user_id"), col("event_type"),
+        LatticeK)
+      .orderBy("m", "itemset")
+
+  /** The kᵐ (m ≤ 2) audit behind q188 AND
+    * [[graft.Graft.kmAnonymityAudit]]. */
+  private[graft] def kmAnonymityAuditOf(df: DataFrame, user: Column, item: Column,
+      k: Int): DataFrame = {
+    val ut = df.select(user.as("graft_u"), item.as("graft_i")).distinct()
       .transform(graft.plans.CorpusPin.pin) // read by singles AND both pair-join sides
-    val singles = ut.groupBy(col("event_type").as("itemset"))
+    val singles = ut.groupBy(col("graft_i").cast("string").as("itemset"))
       .agg(count(lit(1)).as("support")).withColumn("m", lit(1L))
-    val pairs = ut.toDF("user_id", "t1").join(ut.toDF("user_id", "t2"), "user_id")
-      .filter(col("t1") < col("t2"))
-      .select(concat_ws("|", col("t1"), col("t2")).as("itemset"))
+    val pairs = ut.toDF("graft_u", "graft_a")
+      .join(ut.toDF("graft_u", "graft_b"), "graft_u")
+      .filter(col("graft_a") < col("graft_b"))
+      .select(concat_ws("|", col("graft_a"), col("graft_b")).as("itemset"))
       .groupBy("itemset").agg(count(lit(1)).as("support")).withColumn("m", lit(2L))
     singles.unionByName(pairs)
-      .select(col("itemset"), col("m"), col("support"),
-        (col("support") < LatticeK).as("risky"))
-      .orderBy("m", "itemset")
+      .select(col("itemset"), col("m"), col("support"), (col("support") < k).as("risky"))
   }
 
   /** q192: differentially-private MEDIAN via the exponential mechanism

@@ -221,32 +221,47 @@ object StatsOps {
     * Scale: one calendar-bounded daily aggregation, one keyed running
     * window over the daily frame, one rank over the same frame —
     * nothing rescans raw events. */
-  private def q172(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.events(spark, sfDir)
-      .groupBy(col("event_type"), expr("ts_us DIV 86400000000").as("day"))
-      .agg(Tables.dec(sum(Tables.dec(col("value")))).as("v"))
-      .localCheckpoint(true) // calendar-bounded; totals + scoring share one pass
-    val tot = daily.groupBy(col("event_type").as("et"))
-      .agg(Tables.dec(sum("v")).as("sv"), count(lit(1)).as("nd"))
-    val w = Window.partitionBy("event_type").orderBy("day")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val mu = col("sv").cast("double") / col("nd")
-    val cusum = col("s").cast("double") - col("d") * mu
-    val scored = daily
-      .join(broadcast(tot), col("event_type") === col("et"))
-      .select(col("event_type"), col("day"),
-        sum("v").over(w).as("s"),
-        row_number().over(Window.partitionBy("event_type").orderBy("day"))
-          .cast("bigint").as("d"),
-        col("sv"), col("nd"))
-      .select(col("event_type"), col("day"), col("nd"), cusum.as("cu"))
-    val wTop = Window.partitionBy("event_type")
-      .orderBy(abs(col("cu")).desc, col("day"))
-    scored.withColumn("rn", row_number().over(wTop)).filter(col("rn") === 1)
-      .select(col("event_type"), col("day").as("change_day"),
-        col("nd").as("n_days"), Tables.r6(col("cu")).as("cusum"),
-        when(col("cu") >= 0, lit("up")).otherwise(lit("down")).as("direction"))
+  private def q172(spark: SparkSession, sfDir: String): DataFrame =
+    cusumChangepointOf(Tables.events(spark, sfDir), col("event_type"),
+        expr("ts_us DIV 86400000000"), col("value"))
+      .select(col("key").as("event_type"), col("change_point").as("change_day"),
+        col("n_points").as("n_days"), col("cusum"), col("direction"))
       .orderBy("event_type")
+
+  /** The shared first step of [[cusumChangepointOf]] and
+    * [[autocorrelationOf]]: exact DECIMAL sums per (key, time) bucket,
+    * pinned (the totals and the scoring pass both read them), joined
+    * with each key's bucket total `graft_sv` and count `graft_n`. The
+    * pinned frame is key×buckets-sized, so `time` must be a bounded
+    * bucket. Columns: graft_k, graft_t, graft_v, graft_sv, graft_n. */
+  private def bucketedSeries(df: DataFrame, key: Column, time: Column,
+      value: Column): DataFrame = {
+    val per = df.groupBy(key.as("graft_k"), time.as("graft_t"))
+      .agg(Tables.dec(sum(Tables.dec(value))).as("graft_v"))
+      .localCheckpoint(true) // bucket-bounded; totals + scoring share one pass
+    val tot = per.groupBy(col("graft_k").as("graft_k2"))
+      .agg(Tables.dec(sum("graft_v")).as("graft_sv"), count(lit(1)).as("graft_n"))
+    per.join(broadcast(tot), col("graft_k") === col("graft_k2"))
+  }
+
+  /** The CUSUM computation behind q172 AND
+    * [[graft.Graft.cusumChangepoint]]. */
+  private[graft] def cusumChangepointOf(df: DataFrame, key: Column, time: Column,
+      value: Column): DataFrame = {
+    val w = Window.partitionBy("graft_k").orderBy("graft_t")
+    val cusum = sum("graft_v").over(w.rowsBetween(Window.unboundedPreceding,
+        Window.currentRow)).cast("double") -
+      row_number().over(w).cast("bigint") *
+        (col("graft_sv").cast("double") / col("graft_n"))
+    val scored = bucketedSeries(df, key, time, value)
+      .select(col("graft_k"), col("graft_t"), col("graft_n"), cusum.as("graft_cu"))
+    val wTop = Window.partitionBy("graft_k")
+      .orderBy(abs(col("graft_cu")).desc, col("graft_t"))
+    scored.withColumn("graft_rn", row_number().over(wTop))
+      .filter(col("graft_rn") === 1)
+      .select(col("graft_k").as("key"), col("graft_t").as("change_point"),
+        col("graft_n").as("n_points"), Tables.r6(col("graft_cu")).as("cusum"),
+        when(col("graft_cu") >= 0, lit("up")).otherwise(lit("down")).as("direction"))
   }
 
   /** q186: lag-k autocorrelation (ACF, lags 1–3) of the daily value
@@ -265,32 +280,41 @@ object StatsOps {
     * Scale: raw events collapse in ONE calendar-bounded daily shuffle;
     * the LEAD window, the per-type fold, and the 3-row unpivot all run
     * on the ≤ types×days frame. */
-  private def q186(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val daily = Tables.events(spark, sfDir)
-      .groupBy(col("event_type"), expr("ts_us DIV 86400000000").as("day"))
-      .agg(Tables.dec(sum(Tables.dec(col("value")))).as("v"))
-      .localCheckpoint(true) // calendar-bounded; totals + deviations share one pass
-    val tot = daily.groupBy(col("event_type").as("et"))
-      .agg(Tables.dec(sum("v")).as("sv"), count(lit(1)).as("nd"))
-    val wOrd = Window.partitionBy("event_type").orderBy("day")
-    val dev = daily.join(broadcast(tot), col("event_type") === col("et"))
-      .select(col("event_type"), col("day"), col("nd"),
-        (col("v").cast("double") - col("sv").cast("double") / col("nd")).as("dev"))
-    def term(c: Column): Column = Tables.r6(col("dev") * c).cast(DecimalType(18, 6))
-    val sums = dev
-      .withColumn("dev1", lead(col("dev"), 1).over(wOrd))
-      .withColumn("dev2", lead(col("dev"), 2).over(wOrd))
-      .withColumn("dev3", lead(col("dev"), 3).over(wOrd))
-      .groupBy("event_type")
-      .agg(max("nd").as("n_days"), sum(term(col("dev"))).as("sxx"),
-        sum(term(col("dev1"))).as("s1"), sum(term(col("dev2"))).as("s2"),
-        sum(term(col("dev3"))).as("s3"))
-    sums.select(col("event_type"), col("n_days"), col("sxx"),
-        expr("stack(3, 1L, s1, 2L, s2, 3L, s3) AS (lag, sxy)"))
-      .select(col("event_type"), col("lag"), col("n_days"),
-        Tables.r6(col("sxy").cast("double") / col("sxx").cast("double")).as("acf"))
+  private def q186(spark: SparkSession, sfDir: String): DataFrame =
+    autocorrelationOf(Tables.events(spark, sfDir), col("event_type"),
+        expr("ts_us DIV 86400000000"), col("value"), maxLag = 3)
+      .select(col("key").as("event_type"), col("lag"), col("n_buckets").as("n_days"),
+        col("acf"))
       .orderBy("event_type", "lag")
+
+  /** The ACF computation behind q186 AND [[graft.Graft.autocorrelation]]. */
+  private[graft] def autocorrelationOf(df: DataFrame, key: Column, time: Column,
+      value: Column, maxLag: Int): DataFrame = {
+    require(maxLag >= 1 && maxLag <= 12, s"autocorrelation: maxLag $maxLag outside [1, 12]")
+    import org.apache.spark.sql.types.DecimalType
+    val wOrd = Window.partitionBy("graft_k").orderBy("graft_t")
+    val dev = bucketedSeries(df, key, time, value)
+      .select(col("graft_k"), col("graft_t"), col("graft_n"),
+        (col("graft_v").cast("double") -
+          col("graft_sv").cast("double") / col("graft_n")).as("graft_dev"))
+    def term(c: Column): Column =
+      Tables.r6(col("graft_dev") * c).cast(DecimalType(18, 6))
+    val led = (1 to maxLag).foldLeft(dev) { (d, k) =>
+      d.withColumn(s"graft_dev$k", lead(col("graft_dev"), k).over(wOrd))
+    }
+    // one r6→DECIMAL sum per lag + the variance term, built as a list so
+    // maxLag stays a parameter
+    val aggExprs =
+      max("graft_n").as("n_buckets") +:
+      sum(term(col("graft_dev"))).as("graft_sxx") +:
+      (1 to maxLag).map(k => sum(term(col(s"graft_dev$k"))).as(s"graft_s$k"))
+    val folded = led.groupBy("graft_k").agg(aggExprs.head, aggExprs.tail: _*)
+    val stackExpr = (1 to maxLag)
+      .map(k => s"${k}L, graft_s$k").mkString(s"stack($maxLag, ", ", ", ") AS (lag, graft_sxy)")
+    folded.select(col("graft_k").as("key"), col("n_buckets"), col("graft_sxx"),
+        expr(stackExpr))
+      .select(col("key"), col("lag"), col("n_buckets"),
+        Tables.r6(col("graft_sxy").cast("double") / col("graft_sxx").cast("double")).as("acf"))
   }
 
   /** The shared account-balance quantile pass behind q174 and q175
@@ -349,24 +373,31 @@ object StatsOps {
     * Scale: quartiles = two bounded passes over the shared
     * [[acctbalQuantiles]] projection; the flagging join broadcasts the
     * segment-bounded fence frame; one keyed count after. */
-  private def q174(spark: SparkSession, sfDir: String): DataFrame = {
-    val cust = Tables(spark, sfDir, "customer")
-    val fences = acctbalQuantiles(spark, sfDir)._1
-      .select(col("c_mktsegment").as("seg"),
-        Tables.r6(col("q1r")).as("q1"), Tables.r6(col("q3r")).as("q3"))
-      .select(col("seg"), col("q1"), col("q3"),
-        (col("q1") - lit(1.5) * (col("q3") - col("q1"))).as("lo"),
-        (col("q3") + lit(1.5) * (col("q3") - col("q1"))).as("hi"))
-    cust.join(broadcast(fences), col("c_mktsegment") === col("seg"))
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n"),
-        max(col("q1")).as("q1"), max(col("q3")).as("q3"),
-        sum(when(col("c_acctbal") < col("lo") || col("c_acctbal") > col("hi"), 1L)
+  private def q174(spark: SparkSession, sfDir: String): DataFrame =
+    iqrOutliersOf(Tables(spark, sfDir, "customer"), "c_mktsegment", col("c_acctbal"),
+        acctbalQuantiles(spark, sfDir)._1)
+      .orderBy("c_mktsegment")
+
+  /** The Tukey-fence report behind q174 AND [[graft.Graft.iqrOutliers]],
+    * given the per-group quartiles: `quartiles` is (group, q1, q3) by
+    * position, one row per group, unrounded (each caller brings its own
+    * quantile pass — q174 shares one with q175). */
+  private[graft] def iqrOutliersOf(df: DataFrame, group: String, value: Column,
+      quartiles: DataFrame): DataFrame = {
+    val fences = quartiles.toDF("graft_g", "graft_q1", "graft_q3")
+      .select(col("graft_g"),
+        Tables.r6(col("graft_q1")).as("q1"), Tables.r6(col("graft_q3")).as("q3"))
+      .select(col("graft_g"), col("q1"), col("q3"),
+        (col("q1") - lit(1.5) * (col("q3") - col("q1"))).as("graft_lo"),
+        (col("q3") + lit(1.5) * (col("q3") - col("q1"))).as("graft_hi"))
+    df.join(broadcast(fences), col(group) === col("graft_g"))
+      .groupBy(col(group))
+      .agg(count(lit(1)).as("n"), max(col("q1")).as("q1"), max(col("q3")).as("q3"),
+        sum(when(value < col("graft_lo") || value > col("graft_hi"), 1L)
           .otherwise(0L)).as("n_outliers"))
-      .select(col("c_mktsegment"), col("n"), col("q1"), col("q3"),
+      .select(col(group), col("n"), col("q1"), col("q3"),
         Tables.r6(col("q3") - col("q1")).as("iqr"), col("n_outliers"),
         Tables.r6(col("n_outliers").cast("double") / col("n")).as("outlier_rate"))
-      .orderBy("c_mktsegment")
   }
 
   /** q175: decile lift table — customers ranked into 10 score bands by
@@ -1696,22 +1727,29 @@ object StatsOps {
       .groupBy("o_custkey").agg(count(lit(1)).as("n"))
     val cw = Tables(spark, sfDir, "customer")
       .join(ow, col("c_custkey") === col("o_custkey"), "left")
-      .select(col("c_nationkey"), col("c_custkey"), col("c_acctbal"),
-        (lit(1L) + coalesce(col("n"), lit(0L))).as("w"))
-    val part = Window.partitionBy("c_nationkey")
-    val ord = part.orderBy(col("c_acctbal"), col("c_custkey"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cw.withColumn("cum", sum("w").over(ord))
-      .withColumn("tot", sum("w").over(part))
-      .withColumn("n_cust", count(lit(1)).over(part))
-      .filter(lit(2L) * col("cum") >= col("tot"))
-      .groupBy(col("c_nationkey").as("nationkey"))
-      .agg(min(struct(col("c_acctbal"), col("c_custkey"), col("cum"),
-        col("tot"), col("n_cust"))).as("m"))
-      .select(col("nationkey"), col("m.n_cust").as("n_cust"),
-        col("m.tot").as("w_total"), col("m.c_acctbal").as("median_bal"),
-        col("m.cum").as("cum_at_median"))
+      .select(col("c_nationkey").as("key"), col("c_acctbal").as("v"),
+        (lit(1L) + coalesce(col("n"), lit(0L))).as("w"), col("c_custkey").as("tie"))
+    weightedMedianOf(cw)
+      .select(col("key").as("nationkey"), col("n").as("n_cust"), col("w_total"),
+        col("median_v").as("median_bal"), col("cum_at_median"))
       .orderBy("nationkey")
+  }
+
+  /** The weighted Type-1 median behind q206 AND
+    * [[graft.Graft.weightedMedian]], plus q206's `cum_at_median`. */
+  private[graft] def weightedMedianOf(df: DataFrame): DataFrame = {
+    val part = Window.partitionBy("key")
+    val ord = part.orderBy(col("v"), col("tie"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    df.withColumn("graft_cum", sum("w").over(ord))
+      .withColumn("graft_tot", sum("w").over(part))
+      .withColumn("graft_n", count(lit(1)).over(part))
+      .filter(lit(2L) * col("graft_cum") >= col("graft_tot"))
+      .groupBy("key")
+      .agg(min(struct(col("v"), col("tie"), col("graft_cum"), col("graft_tot"),
+        col("graft_n"))).as("m"))
+      .select(col("key"), col("m.graft_n").as("n"), col("m.graft_tot").as("w_total"),
+        col("m.v").as("median_v"), col("m.graft_cum").as("cum_at_median"))
   }
 
   /** Per-distinct-value two-group counts over `c_acctbal` (BUILDING vs

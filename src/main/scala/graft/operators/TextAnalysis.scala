@@ -648,23 +648,28 @@ object TextAnalysis {
     *
     * Scale: the corpus collapses to the ≤6×6 confusion frame in one
     * shuffle; everything after is arithmetic on bounded rows. */
-  private def q165(spark: SparkSession, sfDir: String): DataFrame = {
-    val cm = langidFrame(spark, sfDir)
-      .groupBy("lang", "pred_lang").agg(count(lit(1)).as("cnt"))
+  private def q165(spark: SparkSession, sfDir: String): DataFrame =
+    cohensKappaOf(langidFrame(spark, sfDir), col("lang"), col("pred_lang"))
+      .withColumnRenamed("n", "n_docs")
+
+  /** The kappa computation behind q165 AND [[graft.Graft.cohensKappa]]. */
+  private[graft] def cohensKappaOf(df: DataFrame, truth: Column, pred: Column): DataFrame = {
+    val cm = df.groupBy(truth.as("graft_a"), pred.as("graft_b"))
+      .agg(count(lit(1)).as("graft_c"))
       .localCheckpoint(true) // total, diagonal, and both marginals read it
-    val n = cm.agg(sum("cnt").as("n_docs"))
-    val diag = cm.filter(col("lang") === col("pred_lang"))
-      .agg(coalesce(sum("cnt"), lit(0L)).as("nd"))
-    val pe = cm.groupBy("lang").agg(sum("cnt").as("nt"))
-      .join(cm.groupBy("pred_lang").agg(sum("cnt").as("np")),
-        col("lang") === col("pred_lang"))
-      .agg(coalesce(sum(col("nt").cast("double") * col("np")), lit(0.0)).as("s"))
-    val po = col("nd").cast("double") / col("n_docs")
-    // n_docs goes double BEFORE squaring — int64 n*n overflows past ~3.04e9
-    val peF = col("s") /
-      (col("n_docs").cast("double") * col("n_docs").cast("double"))
+    val n = cm.agg(sum("graft_c").as("n"))
+    val diag = cm.filter(col("graft_a") === col("graft_b"))
+      .agg(coalesce(sum("graft_c"), lit(0L)).as("graft_nd"))
+    val pe = cm.groupBy("graft_a").agg(sum("graft_c").as("graft_nt"))
+      .join(cm.groupBy("graft_b").agg(sum("graft_c").as("graft_np")),
+        col("graft_a") === col("graft_b"))
+      .agg(coalesce(sum(col("graft_nt").cast("double") * col("graft_np")),
+        lit(0.0)).as("graft_s"))
+    val po = col("graft_nd").cast("double") / col("n")
+    // n goes double BEFORE squaring — int64 n*n overflows past ~3.04e9
+    val peF = col("graft_s") / (col("n").cast("double") * col("n").cast("double"))
     n.crossJoin(broadcast(diag)).crossJoin(broadcast(pe))
-      .select(col("n_docs"), Tables.r6(po).as("po"), Tables.r6(peF).as("pe"),
+      .select(col("n"), Tables.r6(po).as("po"), Tables.r6(peF).as("pe"),
         Tables.r6((po - peF) / (lit(1.0) - peF)).as("kappa"))
   }
 

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -592,16 +592,22 @@ object TimeSeries {
     * Scale: one per-user LEAD window (state = 1 row), one
     * (a,b)-cardinality-bounded aggregation; support ≥ 2 prunes the
     * long tail before the output sort. */
-  private def q171(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    Tables.events(spark, sfDir)
-      .select(col("user_id"), col("event_type").as("step_a"),
-        lead(col("event_type"), 1).over(w).as("step_b"))
+  private def q171(spark: SparkSession, sfDir: String): DataFrame =
+    transitionSupportOf(Tables.events(spark, sfDir), col("user_id"), col("ts_us"),
+        col("event_id"), col("event_type"), minSupport = 2)
+      .withColumnRenamed("n_keys", "n_users")
+      .orderBy(col("n_users").desc, col("step_a"), col("step_b"))
+
+  /** The transition mining behind q171 AND
+    * [[graft.Graft.transitionSupport]]. */
+  private[graft] def transitionSupportOf(df: DataFrame, key: Column, time: Column,
+      tiebreak: Column, step: Column, minSupport: Long): DataFrame = {
+    val w = Window.partitionBy(key).orderBy(time, tiebreak)
+    df.select(key.as("graft_k"), step.as("step_a"), lead(step, 1).over(w).as("step_b"))
       .filter(col("step_b").isNotNull)
       .groupBy("step_a", "step_b")
-      .agg(countDistinct("user_id").as("n_users"), count(lit(1)).as("n_occ"))
-      .filter(col("n_users") >= 2)
-      .orderBy(col("n_users").desc, col("step_a"), col("step_b"))
+      .agg(countDistinct("graft_k").as("n_keys"), count(lit(1)).as("n_occ"))
+      .filter(col("n_keys") >= minSupport)
   }
 
   /** q176: linear multi-touch attribution — each purchase splits credit

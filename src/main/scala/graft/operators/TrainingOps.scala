@@ -298,22 +298,37 @@ object TrainingOps {
     * split, q148 exact-k sample, q85 stratified fraction).
     *
     * Scale: the per-stratum rank rides DistributedRank's two-phase
-    * global rank on (lang|md5|id) + a #langs-row broadcast offset join —
-    * never a per-stratum window task (q161's recipe). */
-  private def q169(spark: SparkSession, sfDir: String): DataFrame = {
-    val keyed = Tables(spark, sfDir, "documents")
-      .select(col("doc_id"), col("lang"),
-        concat(col("lang"), lit("|"),
-          md5(concat(lit("fold:"), col("doc_id").cast("string"))), lit("|"),
-          lpad(col("doc_id").cast("string"), 12, "0")).as("rk"))
-    val ranked = keyed
-      .join(graft.plans.DistributedRank.denseTokens(keyed, "rk"), "rk")
-    val offsets = ranked.groupBy(col("lang").as("lg"))
-      .agg(min("token").as("off")) // #langs rows — broadcasts
-    ranked.join(broadcast(offsets), col("lang") === col("lg"))
-      .select(col("lang"), ((col("token") - col("off")) % 5).as("fold"))
+    * global rank on (md5(lang)|md5|id) + a #langs-row broadcast offset
+    * join — never a per-stratum window task (q161's recipe). */
+  private def q169(spark: SparkSession, sfDir: String): DataFrame =
+    stratifiedKFoldOf(Tables(spark, sfDir, "documents").select(col("doc_id"), col("lang")),
+        "lang", col("doc_id"), 5, "fold")
       .groupBy("lang", "fold").agg(count(lit(1)).as("n_docs"))
       .orderBy("lang", "fold")
+
+  /** The fold assignment behind q169 AND [[graft.Graft.stratifiedKFold]]:
+    * the input plus `fold` = (rank within the stratum) mod k, the rank
+    * taken over (md5(stratum) | md5(salt:id) | zero-padded id).
+    *
+    * The stratum is hashed to a FIXED-WIDTH prefix: raw values containing
+    * the '|' separator (e.g. strata "a" and "a|b") would interleave in the
+    * global rank and silently unbalance folds. md5 keeps per-stratum
+    * contiguity for any value while preserving within-stratum order (and
+    * hence fold assignments) for separator-free strata. */
+  private[graft] def stratifiedKFoldOf(df: DataFrame, stratum: String, id: Column, k: Int,
+      salt: String): DataFrame = {
+    // NB: not graft_-prefixed — denseTokens reserves that prefix for its
+    // own working columns and rejects such key names.
+    val keyed = df.withColumn("kfold_rk",
+      concat(md5(concat(lit("stratum:"), col(stratum).cast("string"))), lit("|"),
+        md5(concat(lit(s"$salt:"), id.cast("string"))), lit("|"),
+        lpad(id.cast("string"), 20, "0")))
+    val ranked = keyed.join(graft.plans.DistributedRank.denseTokens(keyed, "kfold_rk"), "kfold_rk")
+    val offsets = ranked.groupBy(col(stratum).as("kfold_sg"))
+      .agg(min("token").as("kfold_off")) // #strata rows — broadcasts
+    ranked.join(broadcast(offsets), col(stratum) === col("kfold_sg"))
+      .withColumn("fold", (col("token") - col("kfold_off")) % k)
+      .drop("kfold_rk", "token", "kfold_sg", "kfold_off")
   }
 
   /** q216: feature-matrix materialization — the per-(user, day) wide

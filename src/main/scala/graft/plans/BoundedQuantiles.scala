@@ -158,10 +158,10 @@ object BoundedQuantiles {
   }
 
   /** Boundedness instrumentation for tests: (max histogram bins held by
-    * any group, rows re-read by pass 2). The first is the widest
-    * aggregate/window state the locate pass can see; the second bounds
-    * pass 2's selection input — both must stay ≪ group cardinality on a
-    * high-distinct corpus (ScalePathSuite asserts it). */
+    * any group, pass 2's probe-row × rank-target matches). The first is
+    * the widest aggregate/window state the locate pass can see; the
+    * second bounds pass 2's selection output — both must stay ≪ group
+    * cardinality on a high-distinct corpus (ScalePathSuite asserts it). */
   private[graft] def stateFootprint(
       df: DataFrame,
       groupCols: Seq[String],
@@ -172,8 +172,9 @@ object BoundedQuantiles {
     val maxBins = parts.hist.groupBy(parts.g.map(col): _*)
       .agg(count(lit(1)).as("graft_nb"))
       .agg(max("graft_nb")).collect()(0).getLong(0)
-    // pass-2 input bound: probe rows landing in a target's bin (each
-    // target's bin holds ≤ a 1/buckets-ish fraction of its group)
+    // pass-2 match count: probe-row × rank-target matches (a probe row
+    // in a bin holding k targets counts k times; each target's bin holds
+    // ≤ a 1/buckets-ish fraction of its group)
     val pass2Rows = parts.base.join(broadcast(parts.located), parts.g)
       .filter(binCol(buckets) === col("graft_b")).count()
     (maxBins, pass2Rows)

@@ -404,6 +404,39 @@ class PropertySuite extends AnyFunSuite {
     }, cases = 8)
   }
 
+  test("bipartiteJaccard equals the naive pair scan with duplicate edges and the degree cap") {
+    import spark.implicits._
+    // string keys and repeated edges; part "hot" has maxDeg + 1 members
+    // (generates no pairs but still counts toward degrees), part "cap"
+    // has exactly maxDeg members (still generates pairs)
+    val gen = for {
+      maxDeg <- Gen.choose(2, 4)
+      n <- Gen.choose(0, 30)
+      raw <- Gen.listOfN(n, Gen.zip(Gen.choose(0, 7), Gen.choose(0, 5)))
+      dups <- Gen.choose(1, 6)
+      topK <- Gen.choose(1, 40)
+    } yield (maxDeg, raw, dups, topK)
+    check(Prop.forAll(gen) { case (maxDeg, raw, dups, topK) =>
+      val hot = (0 to maxDeg).map(i => (s"s$i", "hot"))
+      val atCap = (0 until maxDeg).map(i => (s"s${7 - i}", "cap"))
+      val once = raw.map { case (s, p) => (s"s$s", s"p$p") } ++ hot ++ atCap
+      val edges = once ++ once.reverse.take(dups)
+      val distinct = edges.distinct
+      val deg = distinct.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+      val shared = distinct.groupBy(_._2).values.map(_.map(_._1))
+        .filter(_.size <= maxDeg).toSeq
+        .flatMap(_.sorted.combinations(2).map(c => (c(0), c(1))))
+        .groupBy(identity).view.mapValues(_.size.toLong).toMap
+      val expect = shared.toSeq.map { case ((a, b), sh) =>
+        (a, b, sh, deg(a), deg(b), r6d(sh.toDouble / (deg(a) + deg(b) - sh)))
+      }.sortBy(r => (-r._6, r._1, r._2)).take(topK)
+      val got = Graft.bipartiteJaccard(edges.toDF("s", "p"), "s", "p", maxDeg, topK)
+        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
+          r.getLong(3), r.getLong(4), r.getDouble(5))).toSeq
+      got == expect
+    }, cases = 8)
+  }
+
   test("kmAnonymityAudit equals in-memory itemset supports for any k") {
     import spark.implicits._
     val gen = for {

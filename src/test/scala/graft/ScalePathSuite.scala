@@ -132,9 +132,9 @@ class ScalePathSuite extends AnyFunSuite {
     // 300k ALL-DISTINCT doubles in ONE global group — exactly the shape
     // that grows the builtin percentile's counts-map to |rows| entries
     // (the r4 scale-killer). The bounded plan must instead see: at most
-    // `buckets` histogram bins, and a pass-2 re-read restricted to the
-    // few bins holding the target ranks — orders of magnitude below the
-    // group size.
+    // `buckets` histogram bins, and pass-2 probe-row × rank-target
+    // matches restricted to the few bins holding the target ranks —
+    // orders of magnitude below the group size.
     val n = 300000L
     val df = spark.range(n).toDF("id")
       .withColumn("v", col("id").cast("double") * 1.0000001 + 0.5)
@@ -145,7 +145,7 @@ class ScalePathSuite extends AnyFunSuite {
     // ≤ 4 target bins (2 ps × lo/hi) × ~n/4096 rows each on this uniform
     // corpus; 1% of the group is a generous ceiling
     assert(pass2Rows < n / 100,
-      s"pass 2 re-read $pass2Rows rows — not a bounded selection")
+      s"pass 2 matched $pass2Rows probe-row × rank-target pairs — not a bounded selection")
     // and the bounded plan still returns the builtin's exact values here
     val got = graft.plans.BoundedQuantiles
       .groupQuantiles(df, Nil, col("v"), ps, Seq("a", "b"), buckets = 4096)

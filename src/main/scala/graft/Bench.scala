@@ -63,15 +63,20 @@ object Bench {
 
   /** The regression tripwire, extracted pure so BenchGateSuite can drive
     * it with fabricated history (VERDICT r15 item 5). A query is flagged
-    * iff it has a timing in each of the trailing 3 same-sf_dir history
-    * runs (failed-in-that-run timings excluded — they are time-to-throw,
-    * not plan cost), its current reading exceeds 3× the trailing median,
-    * and it exceeds a 0.3 s absolute floor (sub-tenth-second jitter is
-    * not a regression). History is read BEFORE the current run appends. */
+    * iff it has a timing in each of the trailing 3 history runs on the
+    * same sf_dir and the same `local[N]` (failed-in-that-run timings
+    * excluded — they are time-to-throw, not plan cost), its current
+    * reading exceeds 3× the trailing median, and it exceeds a 0.3 s
+    * absolute floor (sub-tenth-second jitter is not a regression).
+    * History lines that record no N count as another N: at sf0.1, 8
+    * cores beat 32, so timings from different N do not compare. History
+    * is read BEFORE the current run appends. */
   private[graft] def computeRegressionFlags(histLines: Seq[String],
-      sfDir: String, results: Map[String, Double],
+      sfDir: String, localN: Int, results: Map[String, Double],
       failed: Set[String]): Seq[String] = {
-    val same = histLines.filter(_.contains(s""""sf_dir":"$sfDir"""")).takeRight(3)
+    val nre = """"local_n":([0-9]+)[,}]""".r
+    val same = histLines.filter(ln => ln.contains(s""""sf_dir":"$sfDir"""") &&
+      nre.findFirstMatchIn(ln).exists(_.group(1).toInt == localN)).takeRight(3)
     val qre = """"(q[^"]+)":([0-9.]+)""".r
     val hist = same.map { ln =>
       val at = ln.indexOf(""""queries":{""")
@@ -142,6 +147,8 @@ object Bench {
       .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    // the N of local[N], recorded in the summary: runs compare only at equal N
+    val localN = cpus.toIntOption.getOrElse(Runtime.getRuntime.availableProcessors)
     // schema tripwire at the DRIVER's own entry point (VERDICT r9 item 7):
     // SchemaSuite catches drift in `sbt test`, but the bench artifact is
     // what the driver reads — a regenerated table must name itself HERE,
@@ -290,7 +297,7 @@ object Bench {
       Files.readAllLines(Paths.get(histPath)).asScala.toSeq
     } catch { case _: Throwable => Nil }
     def flagsNow(): Seq[String] =
-      computeRegressionFlags(histLines, sfDir, results.toMap, failedQueries.toSet)
+      computeRegressionFlags(histLines, sfDir, localN, results.toMap, failedQueries.toSet)
     // flagged-query steady-state re-measure (VERDICT r15 item 5): a flag
     // raised from a median that happens to sit UNDER the 1.5 s retest
     // threshold never got a second window, so a transient spike during
@@ -395,7 +402,7 @@ object Bench {
     val retestAuditCapped =
       s""""retested_n":${retested.size},"retested":${namesJson(retested, 5)},""" +
       s""""retest_failed":${retestFailed.size},"retest_failed_queries":${namesJson(retestFailed, 5)}"""
-    def telemetry(retestAudit: String, flagCap: Int) = s""""load":${r3(loadAvg)},"cpus":$hostCpus,""" +
+    def telemetry(retestAudit: String, flagCap: Int) = s""""load":${r3(loadAvg)},"cpus":$hostCpus,"local_n":$localN,""" +
       s""""run_epoch":$runEpoch,"data_digest":"$dataDigest",$retestAudit,${failedField(flagCap)},""" +
       s""""regression_flags_n":${regressionFlags.size},""" +
       s""""regression_flags":${namesJson(regressionFlags, flagCap)}"""

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.types.{DecimalType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DecimalType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Central table loader (SURVEY.md §7.1 M0).
   *
@@ -13,16 +13,28 @@ import org.apache.spark.sql.types.{DecimalType, LongType, TimestampNTZType, Time
   *  - every table name maps to exactly one path convention
   *    (`<sfDir>/<name>.parquet`), matching TESTDATA.md.
   *
-  * Scale notes (100 TB): the loader deliberately returns plain
-  * `spark.read.parquet` DataFrames — no caching, no repartitioning — so
-  * Catalyst keeps full freedom for predicate pushdown, column pruning and
-  * partition-aware planning. At cluster scale the same code reads a
-  * directory of many files; nothing here assumes a single file.
+  * Scale notes (100 TB): the loader returns `spark.read.parquet`
+  * DataFrames and caches no data, so Catalyst keeps full freedom for
+  * predicate pushdown, column pruning and partition-aware planning. At
+  * cluster scale the same code reads a directory of many files; nothing
+  * here assumes a single file. Two things it does add: a single-file
+  * table's inferred schema is cached (see [[apply]]), and the engine's
+  * optimizer rules are installed, one of which (`ProbeScanFanOut`) may
+  * repartition an under-split scan above the reader when it feeds a
+  * broadcast hash join.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** Inferred schemas of single-file tables, keyed by file version and by
+    * the session confs that change what parquet inference returns. */
+  private[graft] val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long, Seq[String]), StructType]()
+  private val inferenceConfs = Seq("spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
 
   /** Read one table from `sfDir`. Sets the nanos conf on every call —
     * cheap, idempotent, and guarantees any session we are handed can read
@@ -32,14 +44,46 @@ object Tables {
     * arithmetic on the naive value), so no global state such as
     * `spark.sql.session.timeZone` needs mutating here (ADVICE r9 — a
     * loader that resets session confs on every read silently changes
-    * behavior for host code sharing the session). */
+    * behavior for host code sharing the session).
+    *
+    * A plain `spark.read.parquet` runs a one-task schema-inference job on
+    * every call. When the table is one file, its inferred schema is
+    * cached by (path, length, modification time) and later reads pass it
+    * to `spark.read.schema`, so they start no job; a rewritten file is a
+    * new key and is inferred again. Directories are inferred on every
+    * read. [[verifySchemas]] never consults this cache. */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // session-scoped optimizer rules (idempotent): every query reads its
     // inputs through here, so a driver-provided session gets the scale
     // governors (SimilarityBandRewrite et al.) without GraftExtensions
     graft.plans.GraftRules.install(spark)
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    cachedSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  private def cachedSchema(spark: SparkSession, path: String): Option[StructType] =
+    schemaKey(spark, path).map(schemas.computeIfAbsent(_, _ => inferredSchema(spark, path)))
+
+  /** The schema parquet inference reads from the footers (one Spark job). */
+  private def inferredSchema(spark: SparkSession, path: String): StructType = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.read.parquet(path).schema
+  }
+
+  /** The schema-cache key of a single-file table; None for a directory or
+    * a path whose status cannot be read, which take the inferring read. */
+  private[graft] def schemaKey(spark: SparkSession,
+      path: String): Option[(String, Long, Long, Seq[String])] = {
+    val status = try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p))
+    } catch { case scala.util.control.NonFatal(_) => None }
+    status.filter(_.isFile).map(st => (st.getPath.toString, st.getLen,
+      st.getModificationTime, inferenceConfs.map(k => spark.conf.getOption(k).getOrElse(""))))
   }
 
   /** Canonical events accessor — the ONLY way event-time consumers read
@@ -165,7 +209,10 @@ object Tables {
 
   /** Check every table under `sfDir` against [[expectedSchemas]]; returns
     * one human-readable message per drifted/missing/extra column (empty =
-    * no drift). Metadata-only — reads parquet footers, never data. */
+    * no drift). Metadata-only — reads parquet footers, never data. Always
+    * infers from the files themselves, never from [[apply]]'s schema
+    * cache: a tripwire answered from a cache could miss the drift it
+    * exists to catch. */
   def verifySchemas(spark: SparkSession, sfDir: String): Seq[String] =
     names.flatMap { name =>
       // a MISSING/unreadable table is the loudest drift class of all —
@@ -174,7 +221,7 @@ object Tables {
       // (r15 review: without the tripwire only the queries touching the
       // table would have failed; with an unguarded tripwire, none ran)
       val actualOrErr =
-        try Right(apply(spark, sfDir, name).schema
+        try Right(inferredSchema(spark, s"$sfDir/$name.parquet")
           .map(f => f.name -> f.dataType.simpleString))
         catch { case e: Throwable =>
           Left(s"$name: TABLE MISSING/UNREADABLE (${e.getClass.getSimpleName})") }

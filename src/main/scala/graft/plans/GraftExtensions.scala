@@ -31,6 +31,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       graft.functions.JaroWinkler.builder))
     ext.injectOptimizerRule(_ => LevenshteinPrefilter)
     ext.injectOptimizerRule(_ => SimilarityBandRewrite)
+    ext.injectOptimizerRule(_ => ProbeScanFanOut)
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
     ext.injectPlannerStrategy(_ => BandJoinStrategy)
   }
@@ -40,7 +41,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   * that cannot assume [[GraftExtensions]] was configured at session build
   * time (the driver hands queries an unconfigured session) — the rule
   * analog of `VectorExpressions.register`. Idempotent; called from the
-  * [[graft.Tables]] chokepoint so every query path gets the rules. */
+  * [[graft.Tables]] chokepoint so every query path gets the rules:
+  *  - [[LevenshteinPrefilter]]: an O(1) length bound ahead of every
+  *    edit-distance threshold filter;
+  *  - [[SimilarityBandRewrite]]: brute-force all-pairs vector similarity
+  *    becomes a banded LSH equi-join above the measured crossover;
+  *  - [[ProbeScanFanOut]]: a hash repartition above a parquet scan whose
+  *    file holds fewer row groups than its planned splits, when that scan
+  *    is the probe side of a broadcast hash join. */
 object GraftRules {
   /** Synchronized on the session: Tables.apply calls this on every table
     * read, and an unsynchronized read-modify-write let two first queries
@@ -62,7 +70,7 @@ object GraftRules {
         .exists(_.contains("graft.plans.GraftExtensions"))
       if (viaExtensions) return
       val cur = spark.experimental.extraOptimizations
-      val want = Seq(LevenshteinPrefilter, SimilarityBandRewrite)
+      val want = Seq(LevenshteinPrefilter, SimilarityBandRewrite, ProbeScanFanOut)
         .filterNot(cur.contains)
       if (want.nonEmpty)
         spark.experimental.extraOptimizations = cur ++ want

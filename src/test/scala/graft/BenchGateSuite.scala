@@ -8,9 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * the gate path itself is covered (VERDICT r15 item 5). */
 class BenchGateSuite extends AnyFunSuite {
   private val sfDir = "/data/sf0.1"
+  private val localN = 4
   private def line(queries: Seq[(String, Double)], failed: Seq[String] = Nil,
-      dir: String = sfDir): String =
-    s"""{"metric":"total","value":1.0,"unit":"sec","failed":${failed.size},""" +
+      dir: String = sfDir, n: Int = localN): String =
+    s"""{"metric":"total","value":1.0,"unit":"sec","local_n":$n,"failed":${failed.size},""" +
       s""""failed_queries":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
       s""""queries":${queries.map { case (n, v) => s""""$n":$v""" }
         .mkString("{", ",", "}")},"sf":0.1,"sf_dir":"$dir"}"""
@@ -19,19 +20,19 @@ class BenchGateSuite extends AnyFunSuite {
     Seq.fill(3)(line(Seq("q_a" -> 0.10, "q_b" -> 1.00)))
 
   test("a >3x, >0.3s reading over 3 healthy history runs is flagged") {
-    val flags = Bench.computeRegressionFlags(cleanHist, sfDir,
+    val flags = Bench.computeRegressionFlags(cleanHist, sfDir, localN,
       Map("q_a" -> 0.90, "q_b" -> 1.05), Set.empty)
     assert(flags == Seq("q_a"))
   }
 
   test("the 0.3s absolute floor suppresses sub-threshold jitter") {
-    val flags = Bench.computeRegressionFlags(cleanHist, sfDir,
+    val flags = Bench.computeRegressionFlags(cleanHist, sfDir, localN,
       Map("q_a" -> 0.29, "q_b" -> 1.0), Set.empty)
     assert(flags.isEmpty, "0.10->0.29 is jitter, not a regression")
   }
 
   test("a query that FAILED this run is excluded (time-to-throw)") {
-    val flags = Bench.computeRegressionFlags(cleanHist, sfDir,
+    val flags = Bench.computeRegressionFlags(cleanHist, sfDir, localN,
       Map("q_a" -> 5.0), Set("q_a"))
     assert(flags.isEmpty)
   }
@@ -40,7 +41,7 @@ class BenchGateSuite extends AnyFunSuite {
     // q_a failed in all 3 prior runs with a fast time-to-throw; its first
     // healthy run is SLOWER than the bogus baseline but must not flag
     val hist = Seq.fill(3)(line(Seq("q_a" -> 0.05), failed = Seq("q_a")))
-    val flags = Bench.computeRegressionFlags(hist, sfDir,
+    val flags = Bench.computeRegressionFlags(hist, sfDir, localN,
       Map("q_a" -> 0.9), Set.empty)
     assert(flags.isEmpty, "time-to-throw history must not act as a baseline")
   }
@@ -48,7 +49,7 @@ class BenchGateSuite extends AnyFunSuite {
   test("fewer than 3 same-sf_dir history runs -> no flags (cold start)") {
     val mixed = Seq(line(Seq("q_a" -> 0.1)), line(Seq("q_a" -> 0.1)),
       line(Seq("q_a" -> 0.1), dir = "/data/sf0.01"))
-    val flags = Bench.computeRegressionFlags(mixed, sfDir,
+    val flags = Bench.computeRegressionFlags(mixed, sfDir, localN,
       Map("q_a" -> 0.9), Set.empty)
     assert(flags.isEmpty)
   }
@@ -59,8 +60,22 @@ class BenchGateSuite extends AnyFunSuite {
     // not. Guards against a past transient poisoning future baselines.
     val hist = Seq(line(Seq("q_a" -> 0.1)), line(Seq("q_a" -> 0.1)),
       line(Seq("q_a" -> 10.0)))
-    val flags = Bench.computeRegressionFlags(hist, sfDir,
+    val flags = Bench.computeRegressionFlags(hist, sfDir, localN,
       Map("q_a" -> 0.9), Set.empty)
     assert(flags == Seq("q_a"))
+  }
+
+  test("history runs at another local[N], or with no N recorded, are not a baseline") {
+    // three runs at local[32] with the fast timing, and one older line
+    // from before N was recorded: none may flag a current local[4] run
+    val other = Seq.fill(3)(line(Seq("q_a" -> 0.1), n = 32))
+    val unstamped = line(Seq("q_a" -> 0.1)).replace(s""""local_n":$localN,""", "")
+    val flags = Bench.computeRegressionFlags(other :+ unstamped, sfDir, localN,
+      Map("q_a" -> 0.9), Set.empty)
+    assert(flags.isEmpty, "timings at another N must not act as a baseline")
+    // the same three runs at local[4] do flag it
+    val same = Seq.fill(3)(line(Seq("q_a" -> 0.1)))
+    assert(Bench.computeRegressionFlags(other ++ same, sfDir, localN,
+      Map("q_a" -> 0.9), Set.empty) == Seq("q_a"))
   }
 }

@@ -710,4 +710,159 @@ class PlanRuleSuite extends AnyFunSuite {
         (2L, "lo"), (2L, "mid"), (2L, "hi")),
       s"unbounded delta wrapped: ${unb.toSeq.sorted}")
   }
+
+  // ---- ProbeScanFanOut ----
+  // A ~1.7 MB fact file. With maxPartitionBytes at 256 KB Spark plans 7
+  // splits for it; written as ONE row group only one of them reads rows.
+  private lazy val fanOutDir = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_fanout").toString
+    def fact = spark.range(0, 120000).selectExpr("id % 1000 AS k", "id AS v",
+      "substr(sha2(CAST(id AS STRING), 256), 1, 8) AS payload").coalesce(1)
+    fact.write.parquet(s"$dir/onegroup.parquet")
+    fact.write.option("parquet.block.size", 65536L).parquet(s"$dir/manygroups.parquet")
+    spark.range(0, 1000).selectExpr("id AS k", "concat('n', id) AS name")
+      .coalesce(1).write.parquet(s"$dir/dim.parquet")
+    dir
+  }
+
+  /** `body` with the engine's rules installed and 256 KB splits. */
+  private def withSplitBytes[T](body: => T): T = {
+    graft.plans.GraftRules.install(spark)
+    val prev = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "262144")
+    try body finally prev match {
+      case Some(v) => spark.conf.set("spark.sql.files.maxPartitionBytes", v)
+      case None => spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    }
+  }
+
+  /** `body` with ProbeScanFanOut removed from the session's extra rules,
+    * so the same query gives the plain plan. (The fan-out queries read
+    * with `spark.read`, not Tables, which would install it again.) */
+  private def withoutFanOut[T](body: => T): T = {
+    val prev = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations =
+      prev.filterNot(_ eq graft.plans.ProbeScanFanOut)
+    try body finally spark.experimental.extraOptimizations = prev
+  }
+
+  private def fanOuts(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression => r
+    }
+
+  /** Shuffle exchanges and scan metadata of the executed (final AQE) plan. */
+  private def executed(df: org.apache.spark.sql.DataFrame) = {
+    df.queryExecution.toRdd.count()
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    def all(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] =
+      p.collect {
+        case s: org.apache.spark.sql.execution.adaptive.QueryStageExec => all(s.plan)
+        case other => Seq(other)
+      }.flatten
+    val nodes = all(plan)
+    val exchanges = nodes.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }
+    val scans = nodes.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.metadata("PushedFilters") + " " + s.metadata("ReadSchema")
+    }
+    (exchanges, scans.sorted)
+  }
+
+  private def table(name: String) = spark.read.parquet(s"$fanOutDir/$name.parquet")
+
+  private def probeQuery(name: String) =
+    table(name).filter(col("v") % 3 =!= 0)
+      .withColumn("file", input_file_name())
+      .join(table("dim"), "k")
+      .select(col("k"), col("v"), col("name"), col("file"))
+
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+
+  test("ProbeScanFanOut: an under-split broadcast probe scan gains one hash exchange on its join key") {
+    withSplitBytes {
+      val (plainEx, plainScans) = withoutFanOut(executed(probeQuery("onegroup")))
+      val plain = withoutFanOut(rows(probeQuery("onegroup")))
+      val q = probeQuery("onegroup")
+      val added = fanOuts(q)
+      assert(added.size == 1, s"expected one fan-out:\n${q.queryExecution.optimizedPlan}")
+      assert(added.head.partitionExpressions.map(_.sql) == Seq("k"))
+      assert(added.head.numPartitions == spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      val (ex, scans) = executed(q)
+      assert(ex.size == plainEx.size + 1, s"exchanges ${plainEx.size} -> ${ex.size}")
+      val fan = ex.map(_.outputPartitioning).collect {
+        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning => h
+      }
+      assert(fan.exists(_.expressions.map(_.sql) == Seq("k")),
+        s"no hash exchange on the join key: ${ex.map(_.outputPartitioning)}")
+      assert(scans == plainScans, s"scan changed:\n$plainScans\n$scans")
+      val got = rows(q)
+      assert(got == plain)
+      assert(got.nonEmpty && got.forall(!_.endsWith("|")), "input_file_name() lost below the fan-out")
+    }
+  }
+
+  test("ProbeScanFanOut: no fan-out when the file holds enough row groups") {
+    withSplitBytes {
+      val q = probeQuery("manygroups")
+      assert(fanOuts(q).isEmpty, s"fired on a fully split scan:\n${q.queryExecution.optimizedPlan}")
+      assert(executed(q)._1.size == withoutFanOut(executed(probeQuery("manygroups")))._1.size)
+    }
+  }
+
+  test("ProbeScanFanOut: aggregate-only and filter-only consumers get no exchange") {
+    withSplitBytes {
+      val fact = table("onegroup")
+      val agg = fact.groupBy("k").agg(sum("v"))
+      val filt = fact.filter(col("v") > 100).select("k", "payload")
+      for (q <- Seq(agg, filt)) {
+        assert(fanOuts(q).isEmpty, s"fired without a join:\n${q.queryExecution.optimizedPlan}")
+      }
+      assert(executed(filt)._1.isEmpty)
+    }
+  }
+
+  test("ProbeScanFanOut: a sort-merge join keeps the plain plan's exchanges") {
+    withSplitBytes {
+      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val q = probeQuery("onegroup")
+        assert(fanOuts(q).isEmpty, s"fired below a sort-merge join:\n${q.queryExecution.optimizedPlan}")
+        assert(executed(q)._1.size == withoutFanOut(executed(probeQuery("onegroup")))._1.size)
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
+  }
+
+  test("ProbeScanFanOut: fires exactly once through extraOptimizations and through GraftExtensions") {
+    withSplitBytes {
+      assert(fanOuts(probeQuery("onegroup")).size == 1)
+    }
+    // a fresh session built with the extension: the rule then runs in the
+    // fixed-point operator-optimization batch, not in extraOptimizations
+    import org.apache.spark.sql.SparkSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val ext = try SparkSession.builder()
+      .withExtensions(new graft.plans.GraftExtensions())
+      .getOrCreate()
+    finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+    assert(ext ne spark)
+    assert(!ext.experimental.extraOptimizations.contains(graft.plans.ProbeScanFanOut))
+    ext.conf.set("spark.sql.files.maxPartitionBytes", "262144")
+    val q = ext.read.parquet(s"$fanOutDir/onegroup.parquet")
+      .join(ext.read.parquet(s"$fanOutDir/dim.parquet"), "k")
+    val added = fanOuts(q)
+    assert(added.size == 1, s"expected one fan-out:\n${q.queryExecution.optimizedPlan}")
+    assert(q.count() == 120000)
+  }
 }

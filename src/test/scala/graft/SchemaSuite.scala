@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Schema-drift tripwire (VERDICT r8 item 3). The driver regenerates
@@ -86,5 +87,88 @@ class SchemaSuite extends AnyFunSuite {
     val us2100 = 4102444800000000L // 2100-01-01 in µs
     assert(r.getLong(0) >= us2020 && r.getLong(1) <= us2100,
       s"ts_us out of plausible µs range: [${r.getLong(0)}, ${r.getLong(1)}]")
+  }
+
+  // ---- Tables.apply's schema cache ----
+
+  /** Write `df` as ONE parquet file at `path` (Tables caches only files). */
+  private def writeFile(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
+    val tmp = path + ".tmpdir"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(path),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
+  /** Jobs started by `body`, counted through a listener by job group. */
+  private def jobsDuring(group: String)(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => seen.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, group)
+      try body finally spark.sparkContext.clearJobGroup()
+      // the listener bus is async and FIFO: once a sentinel job's start
+      // arrives, every earlier start has been delivered
+      spark.sparkContext.setJobGroup(group + "-sentinel", "drain")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.containsKey(group + "-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.containsKey(group + "-sentinel"), "listener bus failed to drain in 30 s")
+      Option(seen.get(group)).map(_.intValue).getOrElse(0)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("Tables.apply starts no Spark job after the first read of a file version") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_schema_cache").toString
+    writeFile(spark.range(0, 50).selectExpr("id AS a", "CAST(id AS STRING) AS b"),
+      s"$dir/t.parquet")
+    val first = jobsDuring("schema-first-read")(Tables(spark, dir, "t").schema)
+    assert(first >= 1, "the first read should infer the schema with a job")
+    val second = jobsDuring("schema-second-read") {
+      val df = Tables(spark, dir, "t")
+      assert(df.schema.fieldNames.toSeq == Seq("a", "b"))
+    }
+    assert(second == 0, s"second read of an unchanged file started $second job(s)")
+    assert(Tables(spark, dir, "t").count() == 50)
+  }
+
+  test("Tables.apply re-infers the schema of a rewritten file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_schema_rewrite").toString
+    writeFile(spark.range(0, 10).selectExpr("CAST(id AS INT) AS a"), s"$dir/t.parquet")
+    assert(Tables(spark, dir, "t").schema.map(_.dataType.simpleString) == Seq("int"))
+    writeFile(spark.range(0, 20).selectExpr("id AS a", "CAST(id AS STRING) AS c"),
+      s"$dir/t.parquet")
+    val df = Tables(spark, dir, "t")
+    assert(df.schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("a" -> "bigint", "c" -> "string"))
+    assert(df.count() == 20)
+  }
+
+  test("verifySchemas flags a drifted column even when the schema cache is warm and stale") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_schema_drift").toString
+    Tables.names.filter(_ != "lineitem").foreach { n =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/$n.parquet"),
+        java.nio.file.Paths.get(s"$dir/$n.parquet"))
+    }
+    val good = Tables(spark, sf, "lineitem")
+    val path = s"$dir/lineitem.parquet"
+    writeFile(good.withColumn("l_quantity", col("l_quantity").cast("int")), path)
+    Tables(spark, dir, "lineitem") // warm the cache
+    // a rewrite that keeps length and modification time would leave the
+    // pre-drift schema cached under the drifted file's key
+    Tables.schemas.put(Tables.schemaKey(spark, path).get, good.schema)
+    assert(Tables(spark, dir, "lineitem").schema("l_quantity").dataType.simpleString == "double",
+      "Tables.apply should answer from the (stale) cache here")
+    val drift = Tables.verifySchemas(spark, dir)
+    assert(drift == Seq("lineitem.l_quantity: type drifted to int (expected one of double)"),
+      drift.mkString("\n"))
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main — runs every SparkEntry query against
@@ -111,44 +110,11 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // unset ⇒ one task slot per available core: a fixed local[32] on a
     // smaller host oversubscribes it, and a fixed 4 underuses a larger one.
-    // Set SPARK_GRAFT_CPUS to reproduce an earlier run's local[N].
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      // CorpusPin frames ride the SQL columnar cache (persist-with-
-      // lineage, SCALING.md r16): per-column compression is pure CPU on
-      // a single node where the cache always fits RAM+disk — measured
-      // ~8% off the pinned-query tier with it disabled. On a
-      // memory-pressured cluster re-enable it (bigger batches spill).
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      // CorpusPin frames live one query and feed 2-4 row-based consumers:
-      // store raw UnsafeRow images (localCheckpoint's cost profile, WITH
-      // lineage) instead of columnar batches — RowCacheSerializer scaladoc
-      .config("spark.sql.cache.serializer", "graft.plans.RowCacheSerializer")
-      // Single-node shuffles go to tmpfs: LZ4 on shuffle/spill/broadcast
-      // blocks is pure CPU with no I/O to amortize (r18 full-bench A/B:
-      // geomean −4%, 182 of 366 queries faster, shuffle-heavy tier −0.3
-      // to −0.5 s each). Parameterised because the trade flips on a
-      // cluster — there compression pays for NETWORK, so production runs
-      // set SPARK_GRAFT_SHUFFLE_COMPRESS=true (the Spark default).
-      .config("spark.shuffle.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      .config("spark.shuffle.spill.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      .config("spark.broadcast.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-    // extra confs for experiments: SPARK_GRAFT_CONF="k=v;k2=v2"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
+    // Set SPARK_GRAFT_CPUS to reproduce an earlier run's local[N]; the N
+    // is recorded in the summary: runs compare only at equal N.
+    val localN = GraftSession.cpus(sys.env.get("SPARK_GRAFT_CPUS"))
+    val spark = GraftSession(cpus = Some(localN))
     spark.sparkContext.setLogLevel("ERROR")
-    // the N of local[N], recorded in the summary: runs compare only at equal N
-    val localN = cpus.toIntOption.getOrElse(Runtime.getRuntime.availableProcessors)
     // schema tripwire at the DRIVER's own entry point (VERDICT r9 item 7):
     // SchemaSuite catches drift in `sbt test`, but the bench artifact is
     // what the driver reads — a regenerated table must name itself HERE,
@@ -172,11 +138,10 @@ object Bench {
     // `reps` times and reports its MEDIAN — the per-round comparison no
     // longer hangs off a single sample on a ±20%-noise box (BASELINE.md
     // §noise). Default 3; SPARK_GRAFT_REPS=1 restores the old
-    // single-shot behavior for quick dev loops (SPARK_GRAFT_REPEAT kept
-    // as an alias). Every rep still streams its own line, so rep-1
-    // (plan+codegen) vs steady-state remains visible in the log.
-    val reps = sys.env.get("SPARK_GRAFT_REPS")
-      .orElse(sys.env.get("SPARK_GRAFT_REPEAT")).map(_.toInt).getOrElse(3)
+    // single-shot behavior for quick dev loops. Every rep still streams
+    // its own line, so rep-1 (plan+codegen) vs steady-state remains
+    // visible in the log.
+    val reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(3)
     var qIdx = 0
     // queries with ≥1 failed rep — a failure MUST be loud (VERDICT r8
     // item 2: the old `catch => -1L` recorded 30 analysis-failure

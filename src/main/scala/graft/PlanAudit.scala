@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: dump physical plans for representative queries and grep
   * the markers that matter at scale — PushedFilters reaching the parquet
   * scan, pruned ReadSchema, broadcast joins on dim tables, WholeStageCodegen
@@ -24,24 +22,7 @@ object PlanAudit {
     // partition counts, AQE decisions) are the ones the bench actually runs.
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     planDir.foreach(d => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.sql.cache.serializer", "graft.plans.RowCacheSerializer")
-      // shuffle/spill/broadcast compression off on single-node tmpfs
-      // (pure CPU, no I/O to amortize) — Bench.scala comment has the
-      // full-bench A/B; cluster runs set SPARK_GRAFT_SHUFFLE_COMPRESS=true
-      .config("spark.shuffle.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      .config("spark.shuffle.spill.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      .config("spark.broadcast.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n========== $name ==========")

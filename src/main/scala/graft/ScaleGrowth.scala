@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * ln(t16/t4)/ln(4) (the two warmest points; 1.0 = linear, 2.0 =
   * quadratic). Results are recorded in SCALING.md §r17.
   *
-  * Dev tool, run manually:
-  * {{{ sbt "runMain graft.ScaleGrowth" }}} */
+  * Dev tool, run manually at `local[SPARK_GRAFT_CPUS]` (the r17 figures
+  * ran at 32):
+  * {{{ SPARK_GRAFT_CPUS=32 sbt "runMain graft.ScaleGrowth" }}} */
 object ScaleGrowth {
 
   // deterministic token/float streams (no RNG — reruns are comparable)
@@ -101,30 +102,11 @@ object ScaleGrowth {
 
   def main(args: Array[String]): Unit = {
     // optional args: [families-csv-substring-filter] [shufflePartitions]
+    // (default: the session's, N of local[N])
     val famFilter = args.headOption.filter(_.nonEmpty)
-    val shufflePartitions = args.lift(1).map(_.toInt).getOrElse(32)
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.sql.cache.serializer", "graft.plans.RowCacheSerializer")
-      // shuffle/spill/broadcast compression off on single-node tmpfs
-      // (pure CPU, no I/O to amortize) — Bench.scala comment has the
-      // full-bench A/B; cluster runs set SPARK_GRAFT_SHUFFLE_COMPRESS=true
-      .config("spark.shuffle.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      .config("spark.shuffle.spill.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      .config("spark.broadcast.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-    // extra confs for experiments, the Bench/Verify contract:
-    // SPARK_GRAFT_CONF="k=v;k2=v2" (e.g. AQE initialPartitionNum A/Bs)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
+    args.lift(1).foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p.toInt))
     graft.functions.VectorExpressions.register(spark)
     val r3 = (v: Double) => math.round(v * 1000) / 1000.0
 

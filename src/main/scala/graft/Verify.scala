@@ -1,42 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // CorpusPin frames ride the SQL columnar cache (persist-with-
-      // lineage, SCALING.md r16): per-column compression is pure CPU on
-      // a single node where the cache always fits RAM+disk — measured
-      // ~8% off the pinned-query tier with it disabled. On a
-      // memory-pressured cluster re-enable it (bigger batches spill).
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      // CorpusPin frames live one query and feed 2-4 row-based consumers:
-      // store raw UnsafeRow images (localCheckpoint's cost profile, WITH
-      // lineage) instead of columnar batches — RowCacheSerializer scaladoc
-      .config("spark.sql.cache.serializer", "graft.plans.RowCacheSerializer")
-      // shuffle/spill/broadcast compression off on single-node tmpfs
-      // (pure CPU, no I/O to amortize) — Bench.scala comment has the
-      // full-bench A/B; cluster runs set SPARK_GRAFT_SHUFFLE_COMPRESS=true
-      .config("spark.shuffle.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      .config("spark.shuffle.spill.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      .config("spark.broadcast.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-    // extra confs for experiments, same contract as Bench:
-    // SPARK_GRAFT_CONF="k=v;k2=v2" (e.g. the durable pin tier's
-    // spark.graft.pin.durableDir for a tier-on oracle run)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     // same tripwire as Bench (VERDICT r9 item 7): a regenerated table
     // names itself in the correctness run's own stderr

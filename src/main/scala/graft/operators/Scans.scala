@@ -711,11 +711,13 @@ object Scans {
       .orderBy("r_regionkey")
   }
 
-  /** Morton interleave of two 5-bit dims via pure integer DIV/%/× —
-    * `div` is the engine-portable floor division (`DIV` / `//`). */
-  private def zBits(div: String): String = (0 until 5).map(i =>
-    s"((x $div ${1 << i}) % 2) * ${1L << (2 * i)} + " +
-      s"((y $div ${1 << i}) % 2) * ${1L << (2 * i + 1)}").mkString(" + ")
+  /** q110's DuckDB reference for `Graft.zValue`: Morton interleave of two
+    * 5-bit dims via pure integer `//`/%/×. Equal to the facade's
+    * shift-and-mask form on non-negative inputs, which q110's are
+    * (nation key 0–24, balance bucket ≥ 0 since c_acctbal ≥ −999.99). */
+  private def zBits: String = (0 until 5).map(i =>
+    s"((x // ${1 << i}) % 2) * ${1L << (2 * i)} + " +
+      s"((y // ${1 << i}) % 2) * ${1L << (2 * i + 1)}").mkString(" + ")
 
   /** q110: Z-order (Morton) locality layout — interleave the bits of two
     * query dimensions (nation key, 400-unit balance bucket) into one
@@ -735,7 +737,7 @@ object Scans {
       .select(col("c_custkey"),
         col("c_nationkey").cast("bigint").as("x"),
         expr("CAST(floor((c_acctbal + 1000.0) / 400.0) AS BIGINT)").as("y"))
-      .withColumn("z", expr(zBits("DIV")))
+      .withColumn("z", graft.Graft.zValue(col("x"), col("y")))
       .withColumn("tile", expr("z DIV 64"))
       .groupBy("tile")
       .agg(count(lit(1)).as("n"),
@@ -909,7 +911,7 @@ object Scans {
     Q("q110_zorder_locality", q110 _, Some(
       "WITH b AS (SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS x, " +
         "CAST(FLOOR((c_acctbal + 1000.0) / 400.0) AS BIGINT) AS y FROM customer), " +
-        "zt AS (SELECT x, y, " + zBits("//") + " AS z FROM b) " +
+        "zt AS (SELECT x, y, " + zBits + " AS z FROM b) " +
         "SELECT z // 64 AS tile, COUNT(*) AS n, MIN(x) AS x_min, MAX(x) AS x_max, " +
         "MIN(y) AS y_min, MAX(y) AS y_max FROM zt GROUP BY 1 ORDER BY tile")),
     Q("q231_scan_codecs", q231 _, Some(

@@ -18,11 +18,17 @@ class PlanRuleSuite extends AnyFunSuite {
     lit("name5").as("b"))
 
   test("levenshtein threshold filters gain a short-circuit length bound") {
-    val baseline = corpus.filter(expr("levenshtein(a, b) <= 2"))
-      .collect().map(_.getString(0)).toSet
+    // the session installs the rule at build time: take it out for the
+    // un-optimized baseline, then add it back exactly once
     val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ LevenshteinPrefilter
+    val off = prev.filterNot(_ eq LevenshteinPrefilter)
+    spark.experimental.extraOptimizations = off
     try {
+      val baseline = corpus.filter(expr("levenshtein(a, b) <= 2"))
+        .collect().map(_.getString(0)).toSet
+      assert(!corpus.filter(expr("levenshtein(a, b) <= 2")).queryExecution
+        .optimizedPlan.toString.toLowerCase.contains("abs("))
+      spark.experimental.extraOptimizations = off :+ LevenshteinPrefilter
       val q = corpus.filter(expr("levenshtein(a, b) <= 2"))
       val opt = q.queryExecution.optimizedPlan.toString.toLowerCase
       assert(opt.contains("abs(") && opt.contains("length("),

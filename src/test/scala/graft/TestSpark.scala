@@ -3,22 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (session startup ≈6 s; paying
-  * it once keeps `sbt test` fast). Mirrors the driver's Verify config. */
+  * it once keeps `sbt test` fast). Built by the runners' GraftSession, at
+  * local[4], so the suites run the production confs and rules. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // mirror the hosts' CorpusPin cache path (RowCacheSerializer
-      // scaladoc) so the suites exercise the production serializer
-      .config("spark.sql.cache.serializer", "graft.plans.RowCacheSerializer")
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.sql.warehouse.dir",
-        new java.io.File(sys.props("java.io.tmpdir"), "graft_warehouse").getAbsolutePath)
-      .getOrCreate()
+    val s = GraftSession(Seq("spark.sql.warehouse.dir" ->
+      new java.io.File(sys.props("java.io.tmpdir"), "graft_warehouse").getAbsolutePath),
+      cpus = Some(4))
     s.sparkContext.setLogLevel("WARN")
     // DELIBERATE silence (VERDICT r16 item 8): several operators run
     // bounded global windows by design (KM risk tables, offset folds on

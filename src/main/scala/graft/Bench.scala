@@ -106,8 +106,64 @@ object Bench {
       } => name }.toSeq
   }
 
+  /** `SPARK_GRAFT_REPS`: timed runs per query, a positive integer,
+    * unset ⇒ 3. Each query reports its MEDIAN (VERDICT r4 item 6): a
+    * single sample on a ±20%-noise box does not compare across rounds
+    * (BASELINE.md §noise); 1 gives single-shot dev loops. */
+  private[graft] def reps(env: Option[String]): Int = env match {
+    case None => 3
+    case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(throw
+      new IllegalArgumentException(s"SPARK_GRAFT_REPS must be a positive integer, got '$v'"))
+  }
+
+  /** `SPARK_GRAFT_RETEST_SEC`: the median above which a query gets an
+    * end-of-suite retest, a number >= 0 (0 turns the retest off),
+    * unset ⇒ 1.5. */
+  private[graft] def retestSec(env: Option[String]): Double = env match {
+    case None => 1.5
+    case Some(v) => v.toDoubleOption.filter(_ >= 0).getOrElse(throw
+      new IllegalArgumentException(s"SPARK_GRAFT_RETEST_SEC must be a number >= 0, got '$v'"))
+  }
+
+  /** True median; the mean of the two middles for an even count — the
+    * lower-middle sample alone would bias the protocol fast. */
+  private[graft] def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.length % 2 == 1) s(s.length / 2)
+    else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
+  }
+
+  /** Every timing window: `reps` runs of `run`, each followed by the
+    * between-queries sweep and `onRep(rep, sec, err)`. Returns the
+    * median and the last failure, so no window can mistake a fast
+    * failure for a timing (VERDICT r8 item 2). */
+  private def timeReps(spark: org.apache.spark.sql.SparkSession, reps: Int,
+      run: () => Unit, onRep: (Int, Double, Option[String]) => Unit = (_, _, _) => ())
+      : (Double, Option[String]) = {
+    val runs = (1 to reps).map { rep =>
+      val t0 = System.nanoTime()
+      val err = try { run(); None } catch {
+        case e: Throwable =>
+          Some((e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage))
+            .replaceAll("[\\p{Cntrl}\"\\\\]", " ").take(160))
+      }
+      val dt = (System.nanoTime() - t0) / 1e9
+      // drop what the query left behind (localCheckpoint RDDs, CorpusPin
+      // cache entries) AROUND FrameMemo-owned frames, blocking, before the
+      // next timing starts: freed blocks can't linger into its GC
+      // pressure, and no query borrows an earlier query's cache
+      graft.plans.FrameMemo.sweepOthers(spark)
+      onRep(rep, dt, err)
+      (dt, err)
+    }
+    (median(runs.map(_._1)), runs.flatMap(_._2).lastOption)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // read before the session starts, so a bad value fails at once
+    val reps = this.reps(sys.env.get("SPARK_GRAFT_REPS"))
+    val retestSec = this.retestSec(sys.env.get("SPARK_GRAFT_RETEST_SEC"))
     // unset ⇒ one task slot per available core: a fixed local[32] on a
     // smaller host oversubscribes it, and a fixed 4 underuses a larger one.
     // Set SPARK_GRAFT_CPUS to reproduce an earlier run's local[N]; the N
@@ -134,55 +190,26 @@ object Bench {
     // dev-iteration filter: SPARK_GRAFT_ONLY="q50,q76" times just those
     // queries (substring match). Unset in driver runs — full suite.
     val selected = SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY"))
-    // median-of-N protocol (VERDICT r4 item 6): each query is timed
-    // `reps` times and reports its MEDIAN — the per-round comparison no
-    // longer hangs off a single sample on a ±20%-noise box (BASELINE.md
-    // §noise). Default 3; SPARK_GRAFT_REPS=1 restores the old
-    // single-shot behavior for quick dev loops. Every rep still streams
-    // its own line, so rep-1 (plan+codegen) vs steady-state remains
-    // visible in the log.
-    val reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(3)
     var qIdx = 0
-    // queries with ≥1 failed rep — a failure MUST be loud (VERDICT r8
-    // item 2: the old `catch => -1L` recorded 30 analysis-failure
-    // latencies as timings and a whole-family breakage sailed through
-    // invisibly). Failed queries still contribute their (meaningless)
-    // elapsed time so the line format stays stable, but every failed rep
-    // streams an "err" field and the summary carries "failed": N — the
-    // driver-read line — so a nonzero count can't be missed.
+    // queries with ≥1 failed rep: failed queries still contribute their
+    // (meaningless) elapsed time so the line format stays stable, but
+    // every failed rep streams an "err" field and the summary carries
+    // "failed": N — the driver-read line — so a nonzero count can't be
+    // missed.
     val failedQueries = scala.collection.mutable.LinkedHashSet[String]()
     val results = selected.map { case (name, fn) =>
       // a concurrent GC cycle every 15 queries keeps old-gen debris from
       // earlier queries out of later queries' timings
       qIdx += 1
       if (qIdx % 15 == 0) System.gc()
-      val times = (1 to reps).map { rep =>
-        val t0 = System.nanoTime()
-        val err = try { fn(spark, sfDir).count(); None } catch {
-          case e: Throwable =>
-            Some((e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage))
-              .replaceAll("[\\p{Cntrl}\"\\\\]", " ").take(160))
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        err.foreach { _ => failedQueries += name }
-        // drop session state a query may have left behind (localCheckpoint
-        // RDDs, CorpusPin cache entries) BEFORE the next timing starts —
-        // blocking, so freed blocks can't linger into the next query's GC
-        // pressure, and so no query borrows an earlier query's cache
-        // sweep AROUND FrameMemo-owned frames (contract + impl:
-        // graft.plans.FrameMemo.sweepOthers)
-        graft.plans.FrameMemo.sweepOthers(spark)
-        val errField = err.map(m => s""","err":"$m"""").getOrElse("")
-        if (reps > 1 || err.isDefined)
+      // every rep streams its own line, so rep 1 (plan+codegen) vs steady
+      // state stays visible in the log
+      val (med, err) = timeReps(spark, reps, () => fn(spark, sfDir).count(),
+        (rep, dt, err) => if (reps > 1 || err.isDefined) {
+          val errField = err.map(m => s""","err":"$m"""").getOrElse("")
           println(s"""{"query":"$name","rep":$rep,"sec":${r3(dt)}$errField}""")
-        dt
-      }
-      // true median for even rep counts too (mean of the two middles) —
-      // the lower-middle sample alone would bias the protocol fast
-      val sortedT = times.sorted
-      val med =
-        if (sortedT.length % 2 == 1) sortedT(sortedT.length / 2)
-        else (sortedT(sortedT.length / 2 - 1) + sortedT(sortedT.length / 2)) / 2.0
+        })
+      if (err.isDefined) failedQueries += name
       // per-query JVM telemetry rides on the median line so a hot reading
       // is adjudicable from the artifact alone (which resource was growing
       // when THIS query ran?) instead of needing a quiet-box re-measure
@@ -197,7 +224,6 @@ object Bench {
     // fully warm, transient pressure likely passed) and report
     // min(median, retest median). Both readings stream, so an intentional
     // regression can't hide: a genuinely slow plan is slow in BOTH windows.
-    val retestSec = sys.env.get("SPARK_GRAFT_RETEST_SEC").map(_.toDouble).getOrElse(1.5)
     // queries whose reported value came from the retest window — flagged in
     // the summary JSON so the headline total is auditable against the
     // per-query retest lines (ADVICE r11 item 2)
@@ -218,27 +244,11 @@ object Bench {
         .sortBy(n => -results(n)).take(20)
       slow.foreach { name =>
         System.gc()
-        // track errors like the main loop (ADVICE r11 item 1: the old
+        // any failed rep voids the retest (ADVICE r11 item 1: the old
         // swallow-and-min timed a fast FAILURE and silently overwrote the
-        // real median with no err field); any failed rep voids the retest.
-        var retestErr: Option[String] = None
-        val times = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          try selected(name)(spark, sfDir).count()
-          catch {
-            case e: Throwable => retestErr = Some(
-              (e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage))
-                .replaceAll("[\\p{Cntrl}\"\\\\]", " ").take(160))
-          }
-          val dt = (System.nanoTime() - t0) / 1e9
-          // sweep AROUND FrameMemo-owned frames (contract + impl:
-        // graft.plans.FrameMemo.sweepOthers)
-        graft.plans.FrameMemo.sweepOthers(spark)
-          dt
-        }.sorted
-        val med2 =
-          if (times.length % 2 == 1) times(times.length / 2)
-          else (times(times.length / 2 - 1) + times(times.length / 2)) / 2.0
+        // real median with no err field)
+        val (med2, retestErr) =
+          timeReps(spark, reps, () => selected(name)(spark, sfDir).count())
         val errField = retestErr.map(m => s""","err":"$m"""").getOrElse("")
         println(s"""{"query":"$name","retest_sec":${r3(med2)},"main_sec":${r3(results(name))}$errField}""")
         if (retestErr.isEmpty && med2 < results(name)) {
@@ -278,16 +288,8 @@ object Bench {
       // letting it through would let a fast failure replace the genuine
       // main-run number, silently clear the flag, and poison the
       // bench_history trailing-median baseline for future rounds.
-      var retestThrew = false
-      val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        try selected(name)(spark, sfDir).count()
-        catch { case _: Throwable => retestThrew = true }
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.plans.FrameMemo.sweepOthers(spark)
-        dt
-      }.sorted
-      val med2 = times(times.length / 2)
+      val (med2, err) = timeReps(spark, 3, () => selected(name)(spark, sfDir).count())
+      val retestThrew = err.isDefined
       println(s"""{"query":"$name","flag_retest_sec":${r3(med2)},"main_sec":${r3(results(name))},"retest_failed":$retestThrew}""")
       if (!retestThrew && med2 < results(name)) {
         results(name) = med2; retested += name

@@ -25,7 +25,10 @@ import org.apache.spark.sql.functions._
   * multiple internal consumers pay the build once. The pin registers a
   * session-global CacheManager entry that outlives the call; call
   * [[release]] when you are done consuming the results (per query, or
-  * per batch of queries) to drop those entries and blocks. Forgetting
+  * per batch of queries) to drop those entries and blocks. Every pin
+  * registers, also one made while a family memo (`FrameMemo`) builds: a
+  * memo entry owns only its own checkpoint, so after [[release]] a
+  * rebuilt memo pins and caches its helpers afresh. Forgetting
   * is bounded, not fatal: the registry caps itself (oldest pin evicted
   * beyond 32 per application, safe because pins keep lineage), so a
   * consumer that never releases trades some cache hygiene for

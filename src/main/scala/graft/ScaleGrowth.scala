@@ -147,8 +147,7 @@ object ScaleGrowth {
           // release GRAFT-owned caches only (pins + memo) so rep 2 pays
           // the operator again — a full RDD sweep would unpersist the
           // INPUT's localCheckpoint, which is unrecoverable
-          graft.plans.CorpusPin.releaseAll(spark)
-          graft.plans.FrameMemo.clear(spark)
+          Graft.release(spark)
           (dt, cnt)
         }.minBy(_._1)
         println(s"""{"family":"${f.name}","scale":$s,"rows_in":${f.base * s},"rows_out":${t._2},"sec":${r3(t._1)}}""")

@@ -37,9 +37,12 @@ import org.apache.spark.storage.StorageLevel
   * labels) documents reliable `checkpoint()` to durable storage as its
   * cluster path.
   *
-  * Hosts sweep non-memo persistent RDDs between queries
-  * (FrameMemo.sweepOthers); a swept pin lazily re-materializes on next
-  * use — with lineage, that is a rebuild, never a failure. */
+  * Every pin registers here, including one made inside a FrameMemo
+  * build (the memo entry owns only its own checkpoint, whose truncated
+  * lineage never reads the pin again). Hosts release them between
+  * queries through FrameMemo.sweepOthers, library callers through
+  * Graft.release; a released pin lazily re-materializes on next use —
+  * with lineage, that is a rebuild, never a failure. */
 object CorpusPin {
   // Pinned handles per application, so hosts can RELEASE between queries.
   // Dataset.persist registers the plan fragment in the session-global
@@ -121,21 +124,15 @@ object CorpusPin {
       case None => ()
     }
     df.persist(StorageLevel.MEMORY_AND_DISK)
-    // a pin during a FrameMemo build belongs to the MEMO (its pinnedIds
-    // diff captures the cache RDD; sweeps spare memo-owned ids) — do not
-    // register it for releaseAll, which would unpersist a memo-pinned
-    // RDD and invalidate the entry on every sweep
-    if (!FrameMemo.inBuild) {
-      val app = df.sparkSession.sparkContext.applicationId
-      pinned += ((app, df))
-      var mine = pinned.filter(_._1 == app)
-      while (mine.length > MaxPinned) {
-        val victim = mine.head
-        try victim._2.unpersist(blocking = false)
-        catch { case _: Throwable => () }
-        pinned -= victim
-        mine = mine.tail
-      }
+    val app = df.sparkSession.sparkContext.applicationId
+    pinned += ((app, df))
+    var mine = pinned.filter(_._1 == app)
+    while (mine.length > MaxPinned) {
+      val victim = mine.head
+      try victim._2.unpersist(blocking = false)
+      catch { case _: Throwable => () }
+      pinned -= victim
+      mine = mine.tail
     }
     df
   }

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Pay-once memo for corpus-derived frames shared by a query FAMILY
   * (VERDICT r10 item 6): the dedup family (q61/q185/q272/q285/q193/q296/
@@ -22,12 +23,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     Verify) must sweep AROUND memo-owned RDDs — sweep
   *     `getPersistentRDDs` filtered by [[ownedIds]] — or the family pays
   *     the build back on every query and the memo is pure overhead.
-  *  2. The memo itself never ASSUMES its blocks survived: every lookup
-  *     revalidates that all RDD ids pinned at build time are still
+  *  2. An entry owns exactly ONE RDD: the eager checkpoint under the
+  *     `LogicalRDD` leaf of its frame. The memo never ASSUMES those
+  *     blocks survived: every lookup revalidates that this id is still
   *     registered (an unpersisted localCheckpoint is unrecoverable — its
   *     lineage is truncated, so a recompute would throw, not rebuild).
   *     A swept entry is rebuilt from scratch on next use. So a host that
-  *     ignores rule 1 loses the speedup, never correctness.
+  *     ignores rule 1 loses the speedup, never correctness. Everything
+  *     else a build pins or checkpoints is the host's: CorpusPin
+  *     registers its pins wherever they are made, and the next
+  *     [[sweepOthers]] (or [[graft.Graft.release]]) frees them.
   *
   * Scale: at 100 TB the same pay-once role is played by a PERSISTED
   * layout (the q88 bucketed-table pattern) — a session-lifetime pin is
@@ -35,16 +40,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * per session, each a df-capped/candidate-bounded frame, and
   * [[clear]] releases everything explicitly. */
 object FrameMemo {
-  private case class Entry(df: DataFrame, pinnedIds: Set[Int])
+  private case class Entry(df: DataFrame, rddId: Int)
   private val cache =
     scala.collection.mutable.LinkedHashMap.empty[(String, String, String), Entry]
 
-  /** RDD ids currently owned by memo entries of this application —
-    * sweepers must exclude these (contract rule 1). */
+  /** RDD ids currently owned by memo entries of this application, one
+    * checkpoint per entry — sweepers must exclude these (contract
+    * rule 1). */
   def ownedIds(spark: SparkSession): Set[Int] = synchronized {
     val app = spark.sparkContext.applicationId
-    cache.collect { case ((a, _, _), e) if a == app => e.pinnedIds }
-      .flatten.toSet
+    cache.collect { case ((a, _, _), e) if a == app => e.rddId }.toSet
   }
 
   /** THE between-queries sweep, contract rule 1 made self-enforcing
@@ -68,28 +73,10 @@ object FrameMemo {
   /** The memoized frame for (tag, sfDir), building (and eagerly
     * localCheckpoint-ing) on first use or after a sweep. `build` must be
     * deterministic for the key and must NOT checkpoint its result itself
-    * (the memo does); internal checkpoints of helper frames are fine —
-    * their ids are pinned with the entry. */
-  /** True while a memo build is executing ON THE CURRENT THREAD.
-    * [[CorpusPin.pin]] consults it: a pin INSIDE a build becomes
-    * memo-owned via the pinnedIds diff below — registering it for the
-    * host sweep's releaseAll would unpersist a memo-pinned RDD and
-    * silently invalidate the entry on every sweep (r16).
-    *
-    * A per-thread DEPTH, not a boolean (ADVICE r16): `synchronized` is
-    * reentrant, so a build whose `build` thunk itself calls [[shared]]
-    * is legal — a boolean flag would be reset to false by the INNER
-    * build's finally while the outer build is still running, and every
-    * pin after that point would register for releaseAll, recreating the
-    * exact sweep-invalidates-memo bug the flag exists to prevent. And
-    * per-THREAD, so a concurrent [[CorpusPin.pin]] from another session
-    * thread during a build is classified by ITS OWN thread's state, not
-    * misattributed to the memo (where it would leak: never registered,
-    * only force-released by clear()). */
-  private val buildDepth: ThreadLocal[Integer] =
-    ThreadLocal.withInitial(() => Integer.valueOf(0))
-  private[plans] def inBuild: Boolean = buildDepth.get() > 0
-
+    * (the memo does). Helper frames the build pins or checkpoints belong
+    * to the host like any other session state: the eager checkpoint
+    * truncates the entry's lineage, so no helper is read again once the
+    * build returns, and the host's next sweep releases them. */
   def shared(spark: SparkSession, tag: String, sfDir: String)
       (build: => DataFrame): DataFrame = synchronized {
     val sc = spark.sparkContext
@@ -102,26 +89,13 @@ object FrameMemo {
     cache.keys.filter(_._1 != sc.applicationId).toSeq.foreach(cache.remove)
     val key = (sc.applicationId, tag, sfDir)
     cache.get(key) match {
-      case Some(e) if e.pinnedIds.forall(sc.getPersistentRDDs.contains) =>
-        e.df
+      case Some(e) if sc.getPersistentRDDs.contains(e.rddId) => e.df
       case _ =>
-        // Ownership = the getPersistentRDDs DIFF around the build. This
-        // attributes correctly because builds are single-flight (this
-        // lock) and the hosts' sweep/persist activity happens BETWEEN
-        // queries, never concurrently with a build; a host that persists
-        // foreign frames from another thread DURING a build would see
-        // them captured into pinnedIds (over-pinning: they survive
-        // sweeps and are force-released by clear()). There is no RDD-id
-        // attribution API to do better; the contract is documented here
-        // because the failure mode is silent.
-        val before = sc.getPersistentRDDs.keySet.toSet
-        val df =
-          try {
-            buildDepth.set(buildDepth.get() + 1)
-            build.localCheckpoint(eager = true)
-          } finally buildDepth.set(buildDepth.get() - 1)
-        val pinned = sc.getPersistentRDDs.keySet.toSet -- before
-        cache.update(key, Entry(df, pinned))
+        val df = build.localCheckpoint(eager = true)
+        // the checkpoint is the LogicalRDD leaf the frame reads
+        val rddId = df.queryExecution.logical.collectFirst {
+          case r: LogicalRDD => r.rdd.id }.get
+        cache.update(key, Entry(df, rddId))
         df
     }
   }
@@ -133,9 +107,9 @@ object FrameMemo {
     val app = sc.applicationId
     val keys = cache.keys.filter(_._1 == app).toSeq
     keys.foreach { k =>
-      cache.remove(k).foreach(_.pinnedIds.foreach { id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = true))
-      })
+      cache.remove(k).foreach { e =>
+        sc.getPersistentRDDs.get(e.rddId).foreach(_.unpersist(blocking = true))
+      }
     }
   }
 }

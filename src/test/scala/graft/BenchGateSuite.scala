@@ -78,4 +78,28 @@ class BenchGateSuite extends AnyFunSuite {
     assert(Bench.computeRegressionFlags(other ++ same, sfDir, localN,
       Map("q_a" -> 0.9), Set.empty) == Seq("q_a"))
   }
+
+  test("SPARK_GRAFT_REPS must be a positive integer; unset means 3") {
+    assert(Bench.reps(None) == 3)
+    assert(Bench.reps(Some("1")) == 1 && Bench.reps(Some("5")) == 5)
+    for (bad <- Seq("0", "-2", "abc", "1.5", "")) {
+      val e = intercept[IllegalArgumentException](Bench.reps(Some(bad)))
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
+
+  test("SPARK_GRAFT_RETEST_SEC must be a number >= 0; unset means 1.5") {
+    assert(Bench.retestSec(None) == 1.5)
+    assert(Bench.retestSec(Some("0")) == 0.0 && Bench.retestSec(Some("2.5")) == 2.5)
+    for (bad <- Seq("-1", "abc", "NaN", "")) {
+      val e = intercept[IllegalArgumentException](Bench.retestSec(Some(bad)))
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
+
+  test("the timing median: middle sample, or the mean of the two middles") {
+    assert(Bench.median(Seq(3.0)) == 3.0)
+    assert(Bench.median(Seq(5.0, 1.0, 2.0)) == 2.0)
+    assert(Bench.median(Seq(4.0, 1.0, 3.0, 2.0)) == 2.5)
+  }
 }

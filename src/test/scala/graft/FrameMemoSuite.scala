@@ -68,12 +68,12 @@ class FrameMemoSuite extends AnyFunSuite {
       "clear() must unpersist every owned RDD")
   }
 
-  test("a CorpusPin inside a memo build is memo-owned: sweepOthers never invalidates it") {
+  test("a CorpusPin inside a memo build is host-owned: sweepOthers keeps the entry") {
     import spark.implicits._
     // r16 regression guard: pairsFromSigs pins its band frame INSIDE the
-    // minhash_pairs memo build. If that pin registered for releaseAll,
-    // every host sweep would unpersist a memo-pinned RDD and silently
-    // force a rebuild per query — the memo's whole point lost.
+    // minhash_pairs memo build. The host sweep releases that pin; it
+    // must not invalidate the entry and silently force a rebuild per
+    // query — the memo's whole point lost.
     var builds = 0
     def build = {
       builds += 1
@@ -91,14 +91,11 @@ class FrameMemoSuite extends AnyFunSuite {
     plans.FrameMemo.clear(spark)
   }
 
-  test("reentrant memo builds keep pin classification (depth counter, ADVICE r16)") {
+  test("reentrant memo builds: host sweeps never invalidate the outer entry") {
     import spark.implicits._
-    // the old single boolean inBuild was reset by the INNER build's
-    // finally while the OUTER build was still running — a pin issued
-    // after the inner build returned registered for releaseAll, so each
-    // host sweep unpersisted a memo-pinned RDD and invalidated the outer
-    // entry on every query. The per-thread depth keeps the flag true for
-    // the whole outer build.
+    // a build that calls shared() itself (ADVICE r16), then pins: the
+    // sweep releases the pin and spares both entries' checkpoints, so
+    // the outer entry still hits.
     var outerBuilds = 0
     def outer = {
       outerBuilds += 1
@@ -121,9 +118,8 @@ class FrameMemoSuite extends AnyFunSuite {
 
   test("a pin from ANOTHER THREAD during a memo build is host-owned, not memo-owned") {
     import spark.implicits._
-    // per-THREAD depth (ADVICE r16): a concurrent session thread pinning
-    // while some memo build runs must be classified by ITS OWN state —
-    // the old global boolean marked it memo-owned, so it was never
+    // ADVICE r16: a concurrent session thread pinning while some memo
+    // build runs must stay releasable — a pin the memo claimed was never
     // registered and leaked past every releaseAll.
     plans.FrameMemo.clear(spark)
     plans.CorpusPin.releaseAll(spark)
@@ -146,6 +142,65 @@ class FrameMemoSuite extends AnyFunSuite {
     plans.CorpusPin.releaseAll(spark)
     assert(other.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
       "a cross-thread pin during a build must be releasable (host-owned), not leak as memo-owned")
+    plans.FrameMemo.clear(spark)
+  }
+
+  test("after Graft.release a rebuilt memo caches its inner pin again") {
+    // Graft.release drops the pin's CacheManager entry along with the
+    // memo. Were the pin's blocks freed at the RDD level only, the
+    // rebuild's persist would find the stale entry, cache nothing, and
+    // every consumer of the pinned frame would recompute it.
+    val computed = spark.sparkContext.longAccumulator("memo_test_pin_computes")
+    val tagged = udf { (k: Long) => computed.add(1); k * 10 }
+    var inner: org.apache.spark.sql.DataFrame = null
+    def build = {
+      inner = spark.range(6).select(col("id").as("k"), tagged(col("id")).as("t"))
+        .transform(plans.CorpusPin.pin)
+      inner.select(col("k"), (col("t") + 1).as("t1"))
+    }
+    plans.FrameMemo.clear(spark)
+    plans.FrameMemo.shared(spark, "memo_test_release", "sfX")(build).collect()
+    Graft.release(spark)
+    val rebuilt = plans.FrameMemo.shared(spark, "memo_test_release", "sfX")(build)
+    assert(rebuilt.collect().map(_.getLong(1)).sorted.toSeq == (0L until 6L).map(_ * 10 + 1))
+    computed.reset()
+    inner.collect(); inner.collect()
+    assert(computed.value == 0L,
+      s"the rebuilt pin recomputed ${computed.value} rows: its blocks were not cached")
+    Graft.release(spark)
+  }
+
+  test("a memo entry owns one RDD; the build's helpers go at the next sweep") {
+    import spark.implicits._
+    var builds = 0
+    // both helpers stay referenced, so the ContextCleaner cannot free
+    // them behind the test's back: only the sweep may
+    var pin, ckpt: org.apache.spark.sql.DataFrame = null
+    def build = {
+      builds += 1
+      pin = Seq((1L, "a"), (2L, "b")).toDF("k", "v").transform(plans.CorpusPin.pin)
+      ckpt = Seq((1L, 10L), (2L, 20L)).toDF("k", "n").localCheckpoint(true)
+      pin.join(ckpt, "k")
+    }
+    plans.FrameMemo.clear(spark)
+    plans.FrameMemo.sweepOthers(spark)
+    val sc = spark.sparkContext
+    val owned0 = plans.FrameMemo.ownedIds(spark)
+    val live0 = sc.getPersistentRDDs.keySet.toSet
+    val a = plans.FrameMemo.shared(spark, "memo_test_one_owner", "sfX")(build)
+    val owned = plans.FrameMemo.ownedIds(spark) -- owned0
+    val made = sc.getPersistentRDDs.keySet.toSet -- live0
+    assert(owned.size == 1, s"one entry must own one RDD id, owns $owned")
+    assert(made.size == 3 && owned.subsetOf(made),
+      s"the build persists its pin, its helper checkpoint and the entry's checkpoint: $made")
+    plans.FrameMemo.sweepOthers(spark)
+    assert(sc.getPersistentRDDs.keySet.toSet -- live0 == owned,
+      "one sweep must free both helpers and keep the entry's checkpoint")
+    assert(pin.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the swept pin must leave no CacheManager entry")
+    val b = plans.FrameMemo.shared(spark, "memo_test_one_owner", "sfX")(build)
+    assert(builds == 1 && (a eq b), "the entry must still hit after the sweep")
+    assert(b.agg(sum("n")).collect().head.getLong(0) == 30L)
     plans.FrameMemo.clear(spark)
   }
 

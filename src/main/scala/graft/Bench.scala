@@ -197,6 +197,8 @@ object Bench {
     // "failed": N — the driver-read line — so a nonzero count can't be
     // missed.
     val failedQueries = scala.collection.mutable.LinkedHashSet[String]()
+    def codegenCount = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val codegen0 = codegenCount
     val results = selected.map { case (name, fn) =>
       // a concurrent GC cycle every 15 queries keeps old-gen debris from
       // earlier queries out of later queries' timings
@@ -216,6 +218,9 @@ object Bench {
       println(s"""{"query":"$name","sec":${r3(med)},${telemetrySample()}}""")
       name -> med
     }.to(scala.collection.mutable.LinkedHashMap)
+    // classes compiled by the timed loop: a generated-code cache too small
+    // for the suite shows here as recompilation on every rep
+    val codegenCompiles = codegenCount - codegen0
     // ---- steady-state re-measure pass (VERDICT r10 item 1) ----
     // Five r10 readings were 4–15× their steady state from transient box /
     // JVM conditions during their 3-rep window. The gate wants PLAN cost,
@@ -370,6 +375,7 @@ object Bench {
       s""""retested_n":${retested.size},"retested":${namesJson(retested, 5)},""" +
       s""""retest_failed":${retestFailed.size},"retest_failed_queries":${namesJson(retestFailed, 5)}"""
     def telemetry(retestAudit: String, flagCap: Int) = s""""load":${r3(loadAvg)},"cpus":$hostCpus,"local_n":$localN,""" +
+      s""""codegen_compiles":$codegenCompiles,""" +
       s""""run_epoch":$runEpoch,"data_digest":"$dataDigest",$retestAudit,${failedField(flagCap)},""" +
       s""""regression_flags_n":${regressionFlags.size},""" +
       s""""regression_flags":${namesJson(regressionFlags, flagCap)}"""

@@ -44,7 +44,13 @@ object Tables {
     * arithmetic on the naive value), so no global state such as
     * `spark.sql.session.timeZone` needs mutating here (ADVICE r9 — a
     * loader that resets session confs on every read silently changes
-    * behavior for host code sharing the session).
+    * behavior for host code sharing the session). The only other confs
+    * it may set, through `GraftRules.install` and once per JVM, are the
+    * two that let generated classes be reused,
+    * `spark.sql.codegen.cache.maxEntries` and
+    * `spark.sql.codegen.useIdInClassName`, each only when the host left
+    * it unset, the size only before anything was compiled
+    * ([[GraftSession.prepareCodegenCache]]).
     *
     * A plain `spark.read.parquet` runs a one-task schema-inference job on
     * every call. When the table is one file, its inferred schema is

@@ -79,6 +79,14 @@ class BenchGateSuite extends AnyFunSuite {
       Map("q_a" -> 0.9), Set.empty) == Seq("q_a"))
   }
 
+  test("history lines that record codegen_compiles after local_n are still a baseline") {
+    val stamped = cleanHist.map(_.replace(s""""local_n":$localN,""",
+      s""""local_n":$localN,"codegen_compiles":312,"""))
+    assert(stamped.forall(_.contains("codegen_compiles")))
+    assert(Bench.computeRegressionFlags(stamped, sfDir, localN,
+      Map("q_a" -> 0.90, "q_b" -> 1.05), Set.empty) == Seq("q_a"))
+  }
+
   test("SPARK_GRAFT_REPS must be a positive integer; unset means 3") {
     assert(Bench.reps(None) == 3)
     assert(Bench.reps(Some("1")) == 1 && Bench.reps(Some("5")) == 5)

@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Drives [[GraftSession.confs]], the pure conf derivation every runner's
-  * session is built from, without starting a second SparkContext. */
+/** Drives [[GraftSession.confs]] and [[GraftSession.codegenCacheSize]],
+  * the pure derivations every runner's session is built from, without
+  * starting a second SparkContext; then checks the shared session. */
 class GraftSessionSuite extends AnyFunSuite {
   private val localKeys = Seq("spark.sql.shuffle.partitions",
     "spark.sql.inMemoryColumnarStorage.compressed", "spark.shuffle.compress",
@@ -69,5 +71,33 @@ class GraftSessionSuite extends AnyFunSuite {
     assert(spark.sparkContext.master == "local[4]")
     assert(spark.conf.get("spark.sql.cache.serializer") == "graft.plans.RowCacheSerializer")
     assert(spark.experimental.extraOptimizations.contains(graft.plans.ProbeScanFanOut))
+    assert(org.apache.logging.log4j.LogManager.getLogger(
+      "org.apache.spark.sql.execution.window.WindowExec").getLevel ==
+      org.apache.logging.log4j.Level.ERROR)
+  }
+
+  test("codegen cache size: 1024 unless the caller set one or codegen already ran") {
+    assert(GraftSession.codegenCacheSize(None, 0) == Some(1024))
+    assert(GraftSession.codegenCacheSize(Some("64"), 0).isEmpty, "a caller value is kept")
+    assert(GraftSession.codegenCacheSize(None, 5).isEmpty, "the cache already exists")
+  }
+
+  test("generated classes are reused across a batch larger than 100 and across stage ids") {
+    val spark = TestSpark.spark
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def proj(i: Int) = spark.range(4).selectExpr(s"id * 31 + $i")
+    val c0 = compiles
+    (1 to 150).foreach(i => proj(i).collect())
+    // each projection is a class of its own: more than Spark's default 100 entries
+    assert(compiles - c0 >= 150, s"${compiles - c0} compilations")
+    val c1 = compiles
+    proj(1).collect()
+    assert(compiles == c1, s"the first projection compiled again: ${compiles - c1}")
+    // a union's children are separate stages: the second child is proj(2)'s
+    // body under stage id 2
+    proj(2).union(proj(2)).collect()
+    assert(compiles == c1, s"a known body under another stage id compiled: ${compiles - c1}")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1024")
+    assert(spark.conf.get("spark.sql.codegen.useIdInClassName") == "false")
   }
 }
